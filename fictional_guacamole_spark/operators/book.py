@@ -475,23 +475,6 @@ def make_book_kernel(state_ttl_ms: int | None = None):
     return book_kernel
 
 
-# default instance used by batch replays and TTL-less streams
-book_kernel = make_book_kernel()
-
-
-def book_kernel_batch(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stateless applyInPandas variant for batch replays: a full capture is
-    one group, so the book starts empty and replays every frame in order.
-    applyInPandas takes exactly one returned frame per group, so the
-    per-type frames concatenate here (three C-level column concats)."""
-    frames = list(_out_to_pdfs(process_batch(OrderBook(), pdf)))
-    if not frames:
-        return pd.DataFrame(columns=_OUT_COLS, dtype=object)
-    if len(frames) == 1:
-        return frames[0]
-    return pd.concat(frames, ignore_index=True)
-
-
 # Arrow types of the non-timestamp OUTPUT_SCHEMA columns; the two timestamp
 # columns take their type from the INPUT batch's server_ts field so the
 # session-timezone annotation always matches what the JVM sent.
@@ -542,12 +525,13 @@ def _out_to_tables(out: BatchOut, schema) -> Iterator:
 
 
 def book_kernel_batch_arrow(key: tuple, tbl: pa.Table) -> pa.Table:
-    """Stateless ``applyInArrow`` twin of :func:`book_kernel_batch`
-    (round 15): identical kernel loop and emission order, but the frame
-    batch stays a pyarrow Table on both sides of the boundary. Measured at
-    sf0.1 the pandas object-frame conversion was the dominant term of the
-    batch replay (identity-kernel probe: ~1.1 s of a 2.3 s row); this path
-    removes it for every batch replay consumer. (Both parameters carry
+    """Stateless ``applyInArrow`` kernel for batch replays (round 15): a
+    full capture is one group, so the book starts empty and replays every
+    frame in ``seq`` order; the frame batch stays a pyarrow Table on both
+    sides of the boundary. Measured at sf0.1 the pandas object-frame
+    conversion was the dominant term of the batch replay (identity-kernel
+    probe: ~1.1 s of a 2.3 s row); this path removes it for every batch
+    replay consumer. (Both parameters carry
     type hints — PySpark's ``infer_group_arrow_eval_type_from_func``
     raises on partially-annotated functions.)"""
     schema = _pa_out_schema(tbl.schema.field("server_ts").type)
@@ -566,7 +550,7 @@ def apply_book_kernel(frames_df, output_mode: str = "append",
     Streaming: ``applyInPandasWithState`` carries the book across
     micro-batches (optionally with idle-key TTL eviction — see
     make_book_kernel). Batch (full-replay analytics / golden tests): the
-    same pure kernel via stateless ``applyInPandas`` — a batch holds the
+    same pure kernel via stateless ``applyInArrow`` — a batch holds the
     whole history, so state starts empty per product.
 
     Two alternative batch shapes were MEASURED and rejected in round 6

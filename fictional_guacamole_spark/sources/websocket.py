@@ -14,14 +14,14 @@ The reference's connection behavior being reproduced:
   read() call reconnects and continues; Spark's offset contract makes the
   restart safe (frames are only committed once read returns).
 
-Transport: ``websocket-client`` when installed, else the vendored minimal
-RFC 6455 client (sources/ws_client.py) — both speak ``ws://`` and
-``wss://`` (the vendored client wraps with stdlib ``ssl``), so the source
-is live-testable without third-party packages. The full path (handshake →
-subscribe packet → frames → Spark micro-batches → reconnect) runs against
-a loopback server in tests/test_websocket_source.py, including a TLS
-loopback with a self-signed certificate; the replay reader additionally
-exercises the shared offset/restart contract.
+Transport: the vendored minimal RFC 6455 client (sources/ws_client.py),
+stdlib only, speaking ``ws://`` and ``wss://`` (TLS via stdlib ``ssl``),
+so the source is live-testable without third-party packages. The full
+path (handshake → subscribe packet → frames → Spark micro-batches →
+reconnect) runs against a loopback server in
+tests/test_websocket_source.py, including a TLS loopback with a
+self-signed certificate; the replay reader additionally exercises the
+shared offset/restart contract.
 """
 
 from __future__ import annotations
@@ -75,19 +75,9 @@ class WebsocketStreamReader(SimpleDataSourceStreamReader):
         return None  # connect() falls back to the system default context
 
     def _connect(self):
-        try:
-            from websocket import create_connection  # websocket-client
-            sslopt = ({"ca_certs": self.tls_cafile}
-                      if self.tls_cafile else None)
-            ws = create_connection(self.url, timeout=self.recv_timeout_s,
-                                   sslopt=sslopt)
-        except ImportError:
-            # stdlib fallback (ws:// and wss://): same send/recv/close
-            # surface, loopback-integration-tested (incl. TLS) in
-            # tests/test_websocket_source.py
-            from fictional_guacamole_spark.sources.ws_client import connect
-            ws = connect(self.url, timeout=self.recv_timeout_s,
-                         ssl_context=self._ssl_context())
+        from fictional_guacamole_spark.sources.ws_client import connect
+        ws = connect(self.url, timeout=self.recv_timeout_s,
+                     ssl_context=self._ssl_context())
         for packet in SUBSCRIBE_BUILDERS[self.exchange](self.products):
             ws.send(packet)
         return ws
@@ -103,13 +93,12 @@ class WebsocketStreamReader(SimpleDataSourceStreamReader):
         while len(rows) < self.max_frames_per_batch:
             try:
                 frame = self._ws.recv()
-            except Exception as exc:
-                if isinstance(exc, TimeoutError) \
-                        or "Timeout" in type(exc).__name__:
-                    # quiet socket (no traffic inside recvTimeout): end the
-                    # micro-batch but KEEP the connection — a slow market
-                    # must not become a reconnect storm
-                    break
+            except TimeoutError:
+                # quiet socket (no traffic inside recvTimeout): end the
+                # micro-batch but KEEP the connection — a slow market
+                # must not become a reconnect storm
+                break
+            except Exception:
                 # S5 reconnect path: drop the connection; the next micro-
                 # batch reconnects (fresh snapshot; T5/T6 repair trades).
                 self._ws = None

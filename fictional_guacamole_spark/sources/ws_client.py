@@ -1,17 +1,17 @@
 """Minimal RFC 6455 websocket client (stdlib only), ws:// and wss://.
 
-Fallback transport for the live source (sources/websocket.py) when the
-``websocket-client`` package is absent. Implements exactly what an
-exchange feed needs — client handshake, masked text/binary frames,
+Transport of the live source (sources/websocket.py). Implements exactly
+what an exchange feed needs — client handshake, masked text/binary frames,
 fragmentation reassembly, ping→pong, clean close, and TLS via the stdlib
 ``ssl`` module (the reference endpoints are ``wss://ws-feed.gdax.com``,
 /root/reference/real_guac.py:17, and ``wss://api2.poloniex.com``,
 /root/reference/polo_ws.py:17) — and nothing else (no extensions, no
 compression).
 
-The interface mirrors ``websocket.create_connection``: ``connect()``
-returns an object with ``send(str)``, ``recv() -> str``, ``settimeout``,
-and ``close()`` — the reader treats both transports identically. The
+``connect()`` returns an object with ``send(str)``, ``recv() -> str``,
+``settimeout`` and ``close()``. A ``recv()`` that times out partway
+through a frame or a fragmented message raises ``TimeoutError`` and
+keeps what has arrived, so the next ``recv()`` resumes it. The
 loopback integration tests (tests/test_websocket_source.py) drive THIS
 client against a stdlib server fixture — including a TLS loopback with a
 self-signed certificate for the wss:// path — which is what promotes the
@@ -45,8 +45,10 @@ class MinimalWebSocket:
     def __init__(self, sock: socket.socket) -> None:
         self._sock = sock
         self._buf = b""
+        # payload of a fragmented message whose final frame is still due
+        self._partial: bytes | None = None
 
-    # -- public surface (websocket-client compatible) ----------------------
+    # -- public surface ----------------------------------------------------
 
     def settimeout(self, timeout: float | None) -> None:
         self._sock.settimeout(timeout)
@@ -58,8 +60,6 @@ class MinimalWebSocket:
 
     def recv(self) -> str:
         """Next text/binary message (control frames handled inline)."""
-        message = b""
-        expect_cont = False
         while True:
             fin, op, payload = self._read_frame()
             if op == OP_PING:
@@ -74,14 +74,15 @@ class MinimalWebSocket:
                     pass  # peer may already have torn the socket down
                 self._sock.close()
                 raise WebSocketError("connection closed by peer")
-            if op == OP_CONT and not expect_cont:
+            if op == OP_CONT and self._partial is None:
                 raise WebSocketError("continuation frame without start")
-            if op in (OP_TEXT, OP_BINARY) and expect_cont:
+            if op in (OP_TEXT, OP_BINARY) and self._partial is not None:
                 raise WebSocketError("new message inside fragmented message")
-            message += payload
+            message = (self._partial or b"") + payload
             if fin:
+                self._partial = None
                 return message.decode("utf-8", errors="replace")
-            expect_cont = True
+            self._partial = message
 
     def close(self) -> None:
         try:
@@ -106,26 +107,35 @@ class MinimalWebSocket:
         masked = bytes(b ^ mask[i % 4] for i, b in enumerate(data))
         self._sock.sendall(head + mask + masked)
 
-    def _read_exact(self, n: int) -> bytes:
-        while len(self._buf) < n:
+    def _read_frame(self) -> tuple[bool, int, bytes]:
+        # bytes only ever join the buffer here, and a frame leaves it
+        # whole: a timeout in sock.recv loses nothing already received
+        while (frame := self._take_frame()) is None:
             chunk = self._sock.recv(65536)
             if not chunk:
                 raise WebSocketError("socket closed mid-frame")
             self._buf += chunk
-        out, self._buf = self._buf[:n], self._buf[n:]
-        return out
+        return frame
 
-    def _read_frame(self) -> tuple[bool, int, bytes]:
-        b0, b1 = self._read_exact(2)
-        fin, op = bool(b0 & 0x80), b0 & 0x0F
-        masked, ln = bool(b1 & 0x80), b1 & 0x7F
-        if ln == 126:
-            (ln,) = struct.unpack("!H", self._read_exact(2))
-        elif ln == 127:
-            (ln,) = struct.unpack("!Q", self._read_exact(8))
-        mask = self._read_exact(4) if masked else b""
-        payload = self._read_exact(ln)
+    def _take_frame(self) -> tuple[bool, int, bytes] | None:
+        """Pop one complete frame off the buffer, or None if it does not
+        hold one yet."""
+        buf = self._buf
+        if len(buf) < 2:
+            return None
+        fin, op = bool(buf[0] & 0x80), buf[0] & 0x0F
+        masked, ln = bool(buf[1] & 0x80), buf[1] & 0x7F
+        ext = {126: 2, 127: 8}.get(ln, 0)
+        start = 2 + ext + (4 if masked else 0)
+        if len(buf) < start:
+            return None
+        if ext:
+            (ln,) = struct.unpack("!H" if ext == 2 else "!Q", buf[2:2 + ext])
+        if len(buf) < start + ln:
+            return None
+        payload, self._buf = buf[start:start + ln], buf[start + ln:]
         if masked:
+            mask = buf[start - 4:start]
             payload = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
         return fin, op, payload
 

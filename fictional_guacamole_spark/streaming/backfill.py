@@ -9,21 +9,21 @@ bookkeeping of filled vs still-missing ids, audit logging of anything
 unrecoverable. The REST client is pluggable (tests inject a canned
 fetcher; a live deployment wires a ccxt-style client).
 
-Where it runs: inside ``foreachBatch``, EXECUTOR-SIDE — the batch's gap
-RANGES (small: ranges, never rows) flow through ``repair_frame``, which
-maps the fetcher over the ranges frame with ``mapInPandas`` so repaired
-trades are born distributed and land in the batch's own idempotent write.
-The driver never materializes a repaired row: an outage-sized gap expands
-to its full id width inside executor tasks, not in a driver list (r12
-verdict's one weak row, closed here). ``backfill_gaps`` remains the
-per-partition kernel (and the driver-side form for unit tests).
+Where it runs: inside ``foreachBatch``, EXECUTOR-SIDE — ``repair_frame``
+maps the fetcher over the batch's gap RANGES (small: ranges, never rows)
+with ``mapInPandas``, in the partitions the stateful kernel left them in,
+so repaired trades are born distributed and land in the batch's own
+idempotent write. As in the reference's single backfill worker, one task
+pages each range: gaps are coalesced per product, so an outage is one
+range and no reshuffle could split it. The driver never materializes a
+repaired row. ``backfill_gaps`` remains the per-partition kernel (and the
+driver-side form for unit tests).
 """
 
 from __future__ import annotations
 
 import logging
 import math
-import os
 from typing import TYPE_CHECKING, Callable, Iterable
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
@@ -88,35 +88,24 @@ _REPAIR_SCHEMA = ("product_id string, server_ts timestamp, "
                   "exchange_ts timestamp, sequence long, trade_id long, "
                   "price string, volume string, side string, "
                   "backfilled boolean")
-# ranges are tiny rows but each expands to up to (last-first+1) trades;
-# spreading them over this many tasks bounds per-task expansion and REST
-# paging latency. Floor for the cluster-derived default below: at 32
-# local cores one wave covers 32 ranges.
-_REPAIR_PARTITIONS_FLOOR = 32
 
 
 def _repair_partitions(spark: "SparkSession") -> int:
-    """Repair-task parallelism: the cluster's defaultParallelism with a
-    32-task floor (r13 verdict: a constant 32 would cap an outage-burst
-    repair at 32 tasks on a 1000-executor cluster). Overridable via
-    SPARK_GRAFT_REPAIR_PARTITIONS for deployments that want to bound
-    concurrent REST load on the exchange instead."""
-    env = os.environ.get("SPARK_GRAFT_REPAIR_PARTITIONS")
-    if env:
-        return max(1, int(env))
-    return max(_REPAIR_PARTITIONS_FLOOR,
-               spark.sparkContext.defaultParallelism)
+    """Tasks one repair runs: ``repair_frame`` adds no shuffle, so this is
+    the stateful kernel's partition count, which for a fresh checkpoint
+    is ``spark.sql.shuffle.partitions``."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def repair_frame(gaps: "DataFrame", fetcher: Fetcher) -> "DataFrame":
     """Distributed T6 repair: gap ranges in, repaired trades out.
 
-    The ranges frame hash-shuffles across ``_REPAIR_PARTITIONS`` tasks
-    (ranges are independent, so any placement is correct); each task runs
-    the :func:`backfill_gaps` paging kernel against its ranges and yields
-    Arrow batches of repaired trades. Rows are born on executors — the
-    100 TB posture for an outage-sized gap burst — and the output unions
-    straight into the batch's idempotent trades write."""
+    Each task of ``gaps`` runs the :func:`backfill_gaps` paging kernel
+    against the ranges it already holds and yields Arrow batches of
+    repaired trades; no stage is added, so the repair keeps ``gaps``'s
+    partitioning (the kernel's, hash by ``product_id``). Rows are born on
+    executors and the output unions straight into the batch's idempotent
+    trades write."""
     import sys
 
     import pandas as pd
@@ -160,6 +149,4 @@ def repair_frame(gaps: "DataFrame", fetcher: Fetcher) -> "DataFrame":
             })
 
     ranges = gaps.select("product_id", "gap_first_id", "gap_last_id")
-    return (ranges.repartition(_repair_partitions(gaps.sparkSession),
-                               "product_id", "gap_first_id")
-            .mapInPandas(fetch, schema=_REPAIR_SCHEMA))
+    return ranges.mapInPandas(fetch, schema=_REPAIR_SCHEMA)

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 from fictional_guacamole_spark.operators.book import apply_book_kernel
 from fictional_guacamole_spark.sources.replay import (
     read_frames_batch, read_frames_stream, write_capture)
-from fictional_guacamole_spark.streaming.backfill import backfill_gaps
+from fictional_guacamole_spark.streaming.backfill import (
+    backfill_gaps, repair_frame)
 from fictional_guacamole_spark.streaming.frames import (
     ensure_frame_schema, parse_gdax_frames, parse_polo_frames)
 from fictional_guacamole_spark.streaming.pipeline import (
@@ -217,6 +218,29 @@ class TestBackfill:
                  "gap_last_id": 501}]  # fetcher has no such ids
         repaired = backfill_gaps(gaps, lambda p, a: [])
         assert repaired == []
+
+    def test_repair_frame_keeps_gap_partitions(self, spark):
+        """The repair pages each range in the task that already holds it:
+        no Exchange of its own, same rows as the driver-side kernel."""
+        ranges = [{"product_id": p, "gap_first_id": a, "gap_last_id": b}
+                  for p, a, b in [("ETH-USD", 101, 102), ("BTC-USD", 95, 97),
+                                  ("LTC-USD", 105, 105), ("ETH-USD", 91, 91)]]
+        gaps = spark.createDataFrame(
+            ranges, "product_id string, gap_first_id long, gap_last_id long"
+        ).repartition(3, "product_id")   # the kernel's hash partitioning
+        repaired = repair_frame(gaps, canned_fetcher)
+
+        def exchanges(df):
+            return df._jdf.queryExecution().executedPlan().toString() \
+                .count("Exchange")
+
+        assert repaired.rdd.getNumPartitions() == gaps.rdd.getNumPartitions()
+        assert exchanges(repaired) == exchanges(gaps)
+        cols = ["product_id", "trade_id", "price", "volume", "side",
+                "backfilled"]
+        assert sorted(tuple(r[c] for c in cols) for r in repaired.collect()) \
+            == sorted(tuple(r[c] for c in cols)
+                      for r in backfill_gaps(ranges, canned_fetcher))
 
 
 class TestStreamingEndToEnd:

@@ -19,6 +19,7 @@ import json
 import socket
 import struct
 import threading
+import time
 
 import pytest
 
@@ -112,6 +113,7 @@ class LoopbackWsServer:
     def __init__(self, script, ssl_context=None):
         # script(conn_index) -> list of actions:
         #   ("text", str) | ("ping", bytes) | ("close",) | ("fragmented", str)
+        #   | ("raw", bytes) | ("sleep", seconds)
         self.script = script
         self.ssl_context = ssl_context       # server-side TLS for wss://
         self.received: list[list[str]] = []   # per-connection client texts
@@ -167,6 +169,10 @@ class LoopbackWsServer:
                     conn.send_frame(OP_TEXT, action[1].encode())
                 elif action[0] == "fragmented":
                     conn.send_fragmented_text(action[1])
+                elif action[0] == "raw":
+                    sock.sendall(action[1])
+                elif action[0] == "sleep":
+                    time.sleep(action[1])
                 elif action[0] == "ping":
                     conn.send_frame(OP_PING, action[1])
                     # the client must answer with a pong carrying the payload
@@ -272,6 +278,23 @@ class TestMinimalClient:
         ws = connect(f"ws://127.0.0.1:{srv.port}/", timeout=2.0)
         ws.send("s")
         assert ws.recv() == "split-in-two"
+        ws.close()
+
+    @pytest.mark.parametrize("before, after", [
+        # a lone frame header, then its payload
+        (bytes([0x81, 5]), b"hello"),
+        # a whole first fragment plus the header of the last one
+        (bytes([0x01, 3]) + b"hel" + bytes([0x80, 2]), b"lo"),
+    ], ids=["mid_frame", "mid_message"])
+    def test_timeout_mid_message_resumes(self, ws_server, before, after):
+        srv = ws_server(lambda i: [("raw", before), ("sleep", 1.0),
+                                   ("raw", after)])
+        ws = connect(f"ws://127.0.0.1:{srv.port}/", timeout=0.3)
+        ws.send("s")
+        with pytest.raises(TimeoutError):
+            ws.recv()
+        ws.settimeout(3.0)
+        assert ws.recv() == "hello"
         ws.close()
 
     def test_ping_answered_with_pong(self, ws_server):
