@@ -543,8 +543,7 @@ def book_kernel_batch_arrow(key: tuple, tbl: pa.Table) -> pa.Table:
     return pa.concat_tables(parts)
 
 
-def apply_book_kernel(frames_df, output_mode: str = "append",
-                      state_ttl_ms: int | None = None):
+def apply_book_kernel(frames_df, state_ttl_ms: int | None = None):
     """Wire the kernel onto a frame DataFrame.
 
     Streaming: ``applyInPandasWithState`` carries the book across
@@ -579,7 +578,7 @@ def apply_book_kernel(frames_df, output_mode: str = "append",
             make_book_kernel(state_ttl_ms),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
-            outputMode=output_mode,
+            outputMode="append",
             timeoutConf=("ProcessingTimeTimeout" if state_ttl_ms
                          else "NoTimeout"),
         )

@@ -2405,7 +2405,7 @@ def stream_engine_book_kernel_tws(spark: SparkSession,
                   .option("maxFilesPerTrigger", "1").parquet(base))
         return run_pipeline(stream, sink, ckpt,
                             dedupe_horizon="10 minutes",
-                            kernel="tws", stale_after_s=stale_after_s,
+                            stale_after_s=stale_after_s,
                             query_name=qname)
 
     with _stream_state_partitions(spark), _rocksdb_state_store(spark):

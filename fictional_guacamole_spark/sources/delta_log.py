@@ -60,6 +60,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import unicodedata
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 from urllib.parse import quote
@@ -250,6 +251,26 @@ BROADCAST_MANIFEST_MAX_FILES = int(os.environ.get(
     "FG_DELTA_BROADCAST_MAX_FILES", "250000"))
 
 
+# RFC 2396 path characters java.net.URI leaves literal (what
+# Path.toUri applies); other ASCII percent-escapes as UTF-8
+_JAVA_URI_PATH_SAFE = "/-_.!~*'():@&=+$,;"
+
+
+def _java_uri_path_quote(p: str) -> str:
+    """``p`` quoted the way java.net.URI renders a path component: ASCII
+    outside the RFC 2396 path set escapes, and so do non-ASCII control
+    and space characters, but every other non-ASCII character (RFC 2396
+    "other", e.g. ``é``) stays literal — as ``input_file_name()``
+    reports it."""
+    if p.isascii():
+        return quote(p, safe=_JAVA_URI_PATH_SAFE)
+    return "".join(
+        quote(ch, safe=_JAVA_URI_PATH_SAFE)
+        if ch.isascii() or unicodedata.category(ch) in ("Cc", "Zs", "Zl", "Zp")
+        else ch
+        for ch in p)
+
+
 def read_delta(spark: "SparkSession", table_dir: str,
                version: int | None = None,
                partition_filters: dict | None = None) -> "DataFrame":
@@ -307,9 +328,16 @@ def read_delta(spark: "SparkSession", table_dir: str,
             raise DeltaProtocolError(
                 f"partition_filters name non-partition column(s) "
                 f"{sorted(unknown)}; partition columns are {part_cols}")
-        allowed = {
-            c: ({v} if v is None or isinstance(v, str) else set(v))
-            for c, v in partition_filters.items()}
+        allowed = {}
+        for c, v in partition_filters.items():
+            vals = list(v) if isinstance(v, (list, tuple, set)) else [v]
+            if not all(x is None or isinstance(x, str) for x in vals):
+                # values compare against the log's serialized strings: an
+                # int would never match, so it must not read as "no rows"
+                raise DeltaProtocolError(
+                    f"partition_filters[{c!r}] = {v!r}: values must be "
+                    "serialized partition strings or None")
+            allowed[c] = set(vals)
         files = {p: pv for p, pv in files.items()
                  if all(pv.get(c) in vals for c, vals in allowed.items())}
 
@@ -347,10 +375,6 @@ def read_delta(spark: "SparkSession", table_dir: str,
     jbase = jvm.org.apache.hadoop.fs.Path(table_dir)
     base_uri = (jbase.getFileSystem(hconf).makeQualified(jbase)
                 .toUri().toString().rstrip("/"))
-    # RFC 2396 path characters java.net.URI leaves literal (what
-    # Path.toUri applies); everything else percent-escapes as UTF-8
-    _JAVA_URI_PATH_SAFE = "/-_.!~*'():@&=+$,;"
-
     def _qualified(p: str) -> str:
         if os.path.isabs(p) or "://" in p:
             # absolute manifest path (legal per spec): rare — take the
@@ -358,7 +382,7 @@ def read_delta(spark: "SparkSession", table_dir: str,
             jp = jvm.org.apache.hadoop.fs.Path(p)
             return (jp.getFileSystem(hconf).makeQualified(jp)
                     .toUri().toString())
-        return base_uri + "/" + quote(p, safe=_JAVA_URI_PATH_SAFE)
+        return base_uri + "/" + _java_uri_path_quote(p)
 
     map_schema = StructType(
         [StructField(file_col, StringType(), False),

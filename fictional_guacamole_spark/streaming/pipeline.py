@@ -152,14 +152,13 @@ def run_pipeline(
     fetcher: Fetcher | None = None,
     query_name: str = "exchange_pipeline",
     dedupe_horizon: str | None = None,
-    kernel: str = "classic",
     stale_after_s: int | None = None,
 ):
     """Start the streaming query over an already-parsed FRAME_SCHEMA stream.
 
     Returns the StreamingQuery. Sinks are parquet directories under
-    ``sink_dir``: books/, trades/, gaps/ (+ stale/ with the tws kernel's
-    stale-book alarm armed).
+    ``sink_dir``: books/, trades/, gaps/ (+ stale/ with the stale-book
+    alarm armed).
 
     ``dedupe_horizon`` (e.g. ``"10 minutes"``): drop re-delivered frames by
     (product_id, seq) within an event-time watermark BEFORE the stateful
@@ -170,22 +169,26 @@ def run_pipeline(
     horizon instead of growing with the stream (SURVEY §2.5 streaming row)
     — Spark 4 supports chaining it ahead of the stateful kernel.
 
-    ``kernel``: ``"classic"`` = applyInPandasWithState (operators/book.py);
-    ``"tws"`` = the transformWithState port (operators/book_tws.py), same
-    T1–T5 outputs (hash-pinned by the judged sibling rows), plus the
-    stale-book alarm when ``stale_after_s`` is set (requires a watermark —
-    pass ``dedupe_horizon``).
+    ``stale_after_s`` arms the stale-book alarm: a product whose book goes
+    that many event-time seconds without a frame gets one row in stale/.
+    The alarm is an event-time timer, so it needs the watermark
+    ``dedupe_horizon`` sets; arming it without one raises ValueError.
+    With the alarm armed the book runs on the transformWithState kernel
+    (operators/book_tws.py), the only one with timers; otherwise on the
+    classic applyInPandasWithState kernel (operators/book.py), which
+    gives the same books/trades/gaps faster (tws ran ~1.4× its wall at
+    sf1, SCALE.md r14).
     """
+    if stale_after_s is not None and dedupe_horizon is None:
+        raise ValueError(
+            "stale_after_s needs an event-time watermark to fire: pass "
+            'dedupe_horizon (e.g. "10 minutes")')
     if dedupe_horizon is not None:
         frames = (frames.withWatermark("server_ts", dedupe_horizon)
                   .dropDuplicatesWithinWatermark(["product_id", "seq"]))
-    if kernel == "tws":
+    if stale_after_s is not None:
         from fictional_guacamole_spark.operators.book_tws import (
-            apply_book_kernel_tws, check_bucket_marker)
-        # the bucket count is baked into the state grouping key: pin it to
-        # the checkpoint so a resume under a different layout fails loudly
-        # instead of silently rebuilding books from empty (r14 advice)
-        check_bucket_marker(checkpoint_dir)
+            apply_book_kernel_tws)
         out = apply_book_kernel_tws(frames, stale_after_s=stale_after_s)
     else:
         out = apply_book_kernel(frames)

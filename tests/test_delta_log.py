@@ -282,9 +282,14 @@ class TestR16ReaderScale:
         assert got == [(3, "us"), (4, None)]
 
     def test_partition_filters_unknown_column_raises(self, spark, tmp_path):
+        """Unknown columns and non-string values raise: neither may read
+        as the whole table or as silently empty."""
         w = self._partitioned(spark, tmp_path, "pf3")
-        with pytest.raises(DeltaProtocolError, match="non-partition"):
-            read_delta(spark, w.table_dir, partition_filters={"regoin": "eu"})
+        for filters, match in (({"regoin": "eu"}, "non-partition"),
+                               ({"bucket": 7}, "serialized partition"),
+                               ({"bucket": [7]}, "serialized partition")):
+            with pytest.raises(DeltaProtocolError, match=match):
+                read_delta(spark, w.table_dir, partition_filters=filters)
 
     def test_manifest_sort_merge_gate_matches_broadcast(
             self, spark, tmp_path, monkeypatch):
@@ -304,15 +309,20 @@ class TestR16ReaderScale:
 
     def test_uri_key_exact_on_percent_and_hash_paths(self, spark, tmp_path):
         """The string-extended qualified URI must match input_file_name()
-        on characters java.net.URI percent-escapes ('%', '#') AND on the
-        RFC 2396 literals it does not ('+', '=', ','); a mismatch trips
-        the in-plan raise_error guard."""
+        on characters java.net.URI percent-escapes ('%', '#'), on the
+        RFC 2396 literals it does not ('+', '=', ','), and on non-ASCII
+        characters it leaves literal ('é'); a mismatch trips the in-plan
+        raise_error guard."""
         full = StructType([StructField("k", LongType()),
                            StructField("region", StringType())])
         w = DeltaLogWriter(str(tmp_path / "odd16"))
         f1 = w.write_data_file(_df(spark, [(1,)], "k long"),
                                "region=p%25q#2/part,0.parquet")
+        f2 = w.write_data_file(_df(spark, [(2,)], "k long"),
+                               "region=café/part-0.parquet")
         w.commit([w.protocol_action(), w.metadata_action(full, ["region"]),
-                  w.add_action(f1, {"region": "p%25q#2"})])
+                  w.add_action(f1, {"region": "p%25q#2"}),
+                  w.add_action(f2, {"region": "café"})])
         got = read_delta(spark, w.table_dir).collect()
-        assert [(r["k"], r["region"]) for r in got] == [(1, "p%25q#2")]
+        assert sorted((r["k"], r["region"]) for r in got) == [
+            (1, "p%25q#2"), (2, "café")]

@@ -319,34 +319,62 @@ class TestStreamingEndToEnd:
 
 class TestTwsBookKernel:
     """The transformWithState port of the flagship kernel
-    (operators/book_tws.py): cross-API output equality, the stale-book
-    alarm timer, and batch→stream initial-state bootstrap."""
+    (operators/book_tws.py): run_pipeline's choice of it by the stale
+    alarm, cross-API output equality, the stale-book alarm timer, and
+    batch→stream initial-state bootstrap."""
 
     def _drain(self, spark, frames, sink, ckpt, **kw):
+        """Run the pipeline to completion; returns the names of the
+        stateful operators the query executed."""
         from fictional_guacamole_spark.plans.windows_streaming import (
             _rocksdb_state_store)
         with _rocksdb_state_store(spark):
             q = run_pipeline(frames, sink, ckpt, **kw)
             try:
                 q.processAllAvailable()
+                return {op["operatorName"] for p in q.recentProgress
+                        for op in p["stateOperators"]}
             finally:
                 q.stop()
 
     def test_tws_outputs_equal_classic(self, spark, gdax_capture, tmp_path):
-        outs = {}
-        for kernel in ("classic", "tws"):
+        """Arming the stale alarm switches the book to the tws kernel;
+        books/trades/gaps must not change. Both legs share a watermark
+        wide enough that no fixture frame arrives late."""
+        outs, ops = {}, {}
+        for label, stale_after_s in (("classic", None), ("tws", 3600)):
             frames = ensure_frame_schema(
                 parse_gdax_frames(read_frames_stream(spark, gdax_capture,
                                                      frames_per_batch=3)))
-            sink = str(tmp_path / f"sink_{kernel}")
-            self._drain(spark, frames, sink, str(tmp_path / f"ck_{kernel}"),
-                        kernel=kernel, query_name=f"tws_eq_{kernel}")
-            outs[kernel] = {
+            sink = str(tmp_path / f"sink_{label}")
+            ops[label] = self._drain(
+                spark, frames, sink, str(tmp_path / f"ck_{label}"),
+                dedupe_horizon="1 day", stale_after_s=stale_after_s,
+                query_name=f"tws_eq_{label}")
+            outs[label] = {
                 sub: sorted(
                     tuple(r) for r in spark.read.parquet(f"{sink}/{sub}")
                     .drop("_batch").collect())
                 for sub in ("books", "trades", "gaps")}
         assert outs["classic"] == outs["tws"]
+        assert all(outs["classic"].values())  # non-vacuous comparison
+        assert "applyInPandasWithState" in ops["classic"]
+        assert any("transformWithState" in o for o in ops["tws"])
+
+    def test_stale_alarm_without_watermark_raises(self, spark, gdax_capture,
+                                                  tmp_path):
+        """An armed alarm with no watermark would never fire: refuse it
+        before any query starts."""
+        frames = ensure_frame_schema(
+            parse_gdax_frames(read_frames_stream(spark, gdax_capture,
+                                                 frames_per_batch=3)))
+        with pytest.raises(ValueError, match="watermark"):
+            run_pipeline(frames, str(tmp_path / "sink"),
+                         str(tmp_path / "ckpt"), stale_after_s=3600,
+                         query_name="tws_no_wm")
+        assert not [q for q in spark.streams.active
+                    if q.name == "tws_no_wm"]
+        assert not (tmp_path / "ckpt").exists()
 
     def test_stale_book_alarm_fires_on_idle_product(self, spark, tmp_path):
         """Event-time staleness: product A's last frame is >1h before the
@@ -374,104 +402,13 @@ class TestTwsBookKernel:
                                                  frames_per_batch=2)))
         sink = str(tmp_path / "stale_sink")
         self._drain(spark, parsed, sink, str(tmp_path / "stale_ckpt"),
-                    kernel="tws", stale_after_s=3600,
-                    dedupe_horizon="0 seconds", query_name="tws_stale")
+                    stale_after_s=3600, dedupe_horizon="0 seconds",
+                    query_name="tws_stale")
         stale = spark.read.parquet(f"{sink}/stale").collect()
         assert [(r["product_id"], str(r["server_ts"])) for r in stale] == [
             ("A", "2024-01-05 11:00:10")]
         # the alarm never perturbs the judged sinks
         assert spark.read.parquet(f"{sink}/books").count() == 4
-
-    def test_bucketed_outputs_equal_per_key(self, spark, gdax_capture,
-                                            tmp_path, monkeypatch):
-        """The bucketed-key variant (r13 verdict task #2: O(buckets)
-        state-protocol round trips instead of O(products)) must produce
-        byte-identical sinks to the per-key tws kernel — books, trades,
-        gaps AND stale alarms — on the same replay. Buckets=2 with 2+
-        products exercises multi-product blobs and the shared
-        min-deadline bucket timer."""
-        outs = {}
-        for label, buckets in (("perkey", None), ("bucketed", "2")):
-            if buckets is None:
-                monkeypatch.delenv("SPARK_GRAFT_TWS_BUCKETS",
-                                   raising=False)
-            else:
-                monkeypatch.setenv("SPARK_GRAFT_TWS_BUCKETS", buckets)
-            frames = ensure_frame_schema(
-                parse_gdax_frames(read_frames_stream(spark, gdax_capture,
-                                                     frames_per_batch=3)))
-            sink = str(tmp_path / f"sink_{label}")
-            self._drain(spark, frames, sink,
-                        str(tmp_path / f"ck_{label}"),
-                        kernel="tws", stale_after_s=3600,
-                        dedupe_horizon="0 seconds",
-                        query_name=f"tws_bkt_{label}")
-            got = {}
-            for sub in ("books", "trades", "gaps", "stale"):
-                path = f"{sink}/{sub}"
-                try:
-                    rows = spark.read.parquet(path).drop("_batch").collect()
-                except Exception:
-                    rows = []
-                got[sub] = sorted(tuple(str(v) for v in r) for r in rows)
-            outs[label] = got
-        monkeypatch.delenv("SPARK_GRAFT_TWS_BUCKETS", raising=False)
-        assert outs["perkey"] == outs["bucketed"]
-        assert any(outs["perkey"].values())  # non-vacuous comparison
-
-    def test_bucketed_bootstrap_and_stale_alarm(self, spark, tmp_path,
-                                                monkeypatch):
-        """The silent-bootstrap scenario under bucketing with BOTH
-        products in ONE bucket: the shared bucket timer must alarm
-        exactly the SILENT product at its per-product deadline while the
-        LIVE product's anchor (refreshed by its frame) survives."""
-        import datetime as dt
-
-        from fictional_guacamole_spark.operators.book import OrderBook
-        from fictional_guacamole_spark.operators.book_tws import (
-            apply_book_kernel_tws)
-        from fictional_guacamole_spark.plans.windows_streaming import (
-            _rocksdb_state_store)
-
-        monkeypatch.setenv("SPARK_GRAFT_TWS_BUCKETS", "1")
-        seeded = OrderBook()
-        seeded.install_snapshot([["100", "1"]], [["101", "2"]])
-        b, a, le, mt = seeded.to_state()
-        as_of = dt.datetime(2024, 1, 5, 10, 0, 0)
-        init = spark.createDataFrame(
-            [("SILENT", b, a, le, mt, as_of),
-             ("LIVE", b, a, le, mt, as_of)],
-            "product_id string, bids_json string, asks_json string, "
-            "last_emitted_json string, max_trade_id long, "
-            "as_of_ts timestamp")
-        frames = [json.dumps({"type": "l2update", "product_id": "LIVE",
-                              "changes": [["buy", "100", "3"]],
-                              "time": "2024-01-05T11:00:00.000000Z"})]
-        cap = write_capture(str(tmp_path / "bsilent.jsonl"), frames)
-        parsed = (ensure_frame_schema(
-            parse_gdax_frames(read_frames_stream(spark, cap,
-                                                 frames_per_batch=1)))
-            .withWatermark("server_ts", "0 seconds"))
-        out = apply_book_kernel_tws(parsed, stale_after_s=60,
-                                    initial_state=init)
-        sink = str(tmp_path / "bsilent_sink")
-        with _rocksdb_state_store(spark):
-            q = (out.writeStream.format("parquet")
-                 .option("path", sink)
-                 .option("checkpointLocation", str(tmp_path / "bsilent_ck"))
-                 .outputMode("append").queryName("tws_bsilent").start())
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        rows = spark.read.parquet(sink)
-        stale = rows.filter(F.col("out_type") == "stale").collect()
-        assert [(r["product_id"], str(r["server_ts"])) for r in stale] == [
-            ("SILENT", "2024-01-05 10:01:00")]
-        # LIVE's seeded book + streamed delta landed despite bucketing
-        books = rows.filter(F.col("out_type") == "book").collect()
-        assert [(r["product_id"], r["bids"]) for r in books] == [
-            ("LIVE", ["3@100"])]
 
     def test_initial_state_bootstraps_book(self, spark, tmp_path):
         """Batch→stream migration: the book seeds from a batch-computed
@@ -831,36 +768,3 @@ class TestCompatViews:
         export_csv(compat, str(tmp_path / "csv"))
         back = spark.read.option("header", True).csv(str(tmp_path / "csv"))
         assert back.count() == 2
-
-
-class TestTwsBucketMarker:
-    """The bucket count is baked into the tws state grouping key; a resume
-    under a different layout must fail loudly (r14 advice)."""
-
-    def test_marker_pins_layout_across_restarts(self, tmp_path, monkeypatch):
-        from fictional_guacamole_spark.operators.book_tws import (
-            check_bucket_marker)
-        import pytest
-
-        ckpt = str(tmp_path / "ck")
-        monkeypatch.delenv("SPARK_GRAFT_TWS_BUCKETS", raising=False)
-        check_bucket_marker(ckpt)               # first start: per-key
-        check_bucket_marker(ckpt)               # same layout resumes fine
-        with pytest.raises(ValueError, match="state-layout mismatch"):
-            check_bucket_marker(ckpt, buckets=64)   # toggled to bucketed
-        ckpt2 = str(tmp_path / "ck2")
-        check_bucket_marker(ckpt2, buckets=64)  # bucketed from birth
-        check_bucket_marker(ckpt2, buckets=64)
-        with pytest.raises(ValueError, match="state-layout mismatch"):
-            check_bucket_marker(ckpt2, buckets=128)  # count changed
-        # env-derived count participates identically
-        monkeypatch.setenv("SPARK_GRAFT_TWS_BUCKETS", "64")
-        check_bucket_marker(ckpt2)
-
-    def test_non_local_checkpoint_skipped_with_warning(self, caplog):
-        from fictional_guacamole_spark.operators.book_tws import (
-            check_bucket_marker)
-
-        with caplog.at_level("WARNING"):
-            check_bucket_marker("hdfs://nn/ck", buckets=8)
-        assert any("marker skipped" in r.message for r in caplog.records)

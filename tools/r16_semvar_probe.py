@@ -75,9 +75,10 @@ def main() -> None:
     for i in range(args.runs):
         if args.unpersist_each:
             spark.catalog.clearCache()
-            jsc = spark.sparkContext._jsc.sc()
-            for info in jsc.getPersistentRDDs().values():
-                info.unpersist(True)
+            # JavaSparkContext's java.util.Map (py4j iterates it; the
+            # Scala map SparkContext.getPersistentRDDs returns it cannot)
+            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+                rdd.unpersist(True)
         if args.gc_each or args.unpersist_each:
             gc.collect()
             spark.sparkContext._jvm.System.gc()
