@@ -216,10 +216,16 @@ STATE_SCHEMA = T.StructType([
     T.StructField("max_trade_id", T.LongType()),
 ])
 
+# Book state with the stale-book alarm armed: STATE_SCHEMA plus the alarm
+# anchor (newest frame time seen, epoch ms; null once the alarm fired). A
+# separate schema so unarmed checkpoints keep their four-field state.
+STALE_STATE_SCHEMA = T.StructType(
+    STATE_SCHEMA.fields + [T.StructField("last_ms", T.LongType())])
+
 # Tagged-union output: one stateful pass emits book rows, trade rows, and
 # gap records (the backfill work list).
 OUTPUT_SCHEMA = T.StructType([
-    T.StructField("out_type", T.StringType()),   # book | trade | gap
+    T.StructField("out_type", T.StringType()),   # book | trade | gap | stale
     T.StructField("product_id", T.StringType()),
     T.StructField("server_ts", T.TimestampType()),
     T.StructField("bids", T.ArrayType(T.StringType())),   # "vol@price" packed
@@ -435,38 +441,57 @@ def process_table(book: OrderBook, tbl, depth: int = BOOK_DEPTH) -> BatchOut:
     return _process_sorted(book, col("msg_type"), col, depth)
 
 
-def make_book_kernel(state_ttl_ms: int | None = None):
+def make_book_kernel(stale_after_s: int | None = None):
     """Build the applyInPandasWithState function: one key = one product.
 
     Frames within the micro-batch are replayed in ``seq`` order (websocket
     frames are ordered per connection — the source stamps the arrival
     index). State round-trips through STATE_SCHEMA between batches.
 
-    ``state_ttl_ms`` bounds total state at cluster scale: a product idle
-    longer than the TTL is evicted (books re-seed from the exchange's next
-    snapshot — the same thing that happens on any reconnect, so eviction
-    is semantically a planned reconnect). Trade watermarks restart too;
-    the first trade after eviction re-initializes silently per T5's
-    first-trade rule.
+    ``stale_after_s`` arms the stale-book alarm on the operator's
+    event-time timeout (needs a watermark on server_ts). State then adds
+    the alarm anchor, the newest frame time seen (STALE_STATE_SCHEMA),
+    and every data call arms the timeout for anchor + T. When the
+    watermark reaches it with no newer frame, the key emits one
+    ``out_type="stale"`` row stamped at the deadline and clears the
+    anchor; that state write drops the timeout, so the alarm fires once
+    per stale episode and the next frame re-arms it.
     """
+    stale_after_ms = None if stale_after_s is None else stale_after_s * 1000
 
     def book_kernel(key: tuple, pdfs: Iterator[pd.DataFrame],
                     state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
-            state.remove()
+            *book_state, anchor = state.get
+            state.update((*book_state, None))
+            yield _type_pdf("stale", {
+                "product_id": [key[0]],
+                "server_ts": [pd.Timestamp(anchor + stale_after_ms,
+                                           unit="ms")],
+            })
             return
-        if state.exists:
-            book = OrderBook.from_state(*state.get)
-        else:
-            book = OrderBook()
+        saved = state.get if state.exists else None
+        book = OrderBook.from_state(*saved[:4]) if saved else OrderBook()
 
         batches = list(pdfs)
         pdf = pd.concat(batches) if len(batches) > 1 else batches[0]
         out = process_batch(book, pdf)
 
-        state.update(book.to_state())
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
+        if stale_after_ms is None:
+            state.update(book.to_state())
+        else:
+            anchor = pdf["server_ts"].max().value // 1_000_000
+            if saved and saved[4] is not None:
+                # a late batch keeps the newer anchor
+                anchor = max(anchor, saved[4])
+            state.update((*book.to_state(), anchor))
+            # the alarm is due once the watermark REACHES anchor + T, but
+            # Spark times a key out only once the watermark is strictly
+            # past its timeout (hence - 1 ms) and rejects a timeout behind
+            # the watermark (a product whose first frame lands more than
+            # T behind it alarms on the next watermark advance)
+            state.setTimeoutTimestamp(max(anchor + stale_after_ms - 1,
+                                          state.getCurrentWatermarkMs()))
         # up to three per-type frames — Spark concatenates output frames,
         # so splitting the union costs nothing downstream and skips the
         # mostly-null wide assembly entirely
@@ -543,14 +568,15 @@ def book_kernel_batch_arrow(key: tuple, tbl: pa.Table) -> pa.Table:
     return pa.concat_tables(parts)
 
 
-def apply_book_kernel(frames_df, state_ttl_ms: int | None = None):
+def apply_book_kernel(frames_df, stale_after_s: int | None = None):
     """Wire the kernel onto a frame DataFrame.
 
     Streaming: ``applyInPandasWithState`` carries the book across
-    micro-batches (optionally with idle-key TTL eviction — see
-    make_book_kernel). Batch (full-replay analytics / golden tests): the
-    same pure kernel via stateless ``applyInArrow`` — a batch holds the
-    whole history, so state starts empty per product.
+    micro-batches; ``stale_after_s`` arms the stale-book alarm on its
+    event-time timeout (see make_book_kernel). Batch (full-replay
+    analytics / golden tests): the same pure kernel via stateless
+    ``applyInArrow`` — a batch holds the whole history, so state starts
+    empty per product, and no alarm can be armed.
 
     Two alternative batch shapes were MEASURED and rejected in round 6
     (sf0.1 bench, best-of-3, vs 2.56 s for this path): (a) mapInPandas
@@ -574,14 +600,16 @@ def apply_book_kernel(frames_df, state_ttl_ms: int | None = None):
     """
     grouped = frames_df.groupBy("product_id")
     if frames_df.isStreaming:
+        armed = stale_after_s is not None
         return grouped.applyInPandasWithState(
-            make_book_kernel(state_ttl_ms),
+            make_book_kernel(stale_after_s),
             outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
+            stateStructType=STALE_STATE_SCHEMA if armed else STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=("ProcessingTimeTimeout" if state_ttl_ms
-                         else "NoTimeout"),
+            timeoutConf="EventTimeTimeout" if armed else "NoTimeout",
         )
+    if stale_after_s is not None:
+        raise ValueError("stale_after_s needs a streaming frame DataFrame")
     return grouped.applyInArrow(book_kernel_batch_arrow, schema=OUTPUT_SCHEMA)
 
 

@@ -70,8 +70,8 @@ def make_batch_writer(sink_dir: str, fetcher: Fetcher | None = None,
                       stale_sink: bool = False):
     """Build the foreachBatch callable (factored out so the overflow path
     is testable without a live stream). ``stale_sink``: also demux
-    ``out_type="stale"`` alarm rows (the tws kernel's stale-book timer)
-    into their own parquet sink."""
+    ``out_type="stale"`` alarm rows (the book kernel's stale-book
+    timeout) into their own parquet sink."""
 
     def write_idempotent(df: DataFrame, sub: str, batch_id: int) -> None:
         """Exactly-once append: each write lands in a `_batch=<id>`
@@ -171,13 +171,10 @@ def run_pipeline(
 
     ``stale_after_s`` arms the stale-book alarm: a product whose book goes
     that many event-time seconds without a frame gets one row in stale/.
-    The alarm is an event-time timer, so it needs the watermark
-    ``dedupe_horizon`` sets; arming it without one raises ValueError.
-    With the alarm armed the book runs on the transformWithState kernel
-    (operators/book_tws.py), the only one with timers; otherwise on the
-    classic applyInPandasWithState kernel (operators/book.py), which
-    gives the same books/trades/gaps faster (tws ran ~1.4× its wall at
-    sf1, SCALE.md r14).
+    The alarm is the book kernel's event-time timeout, so it needs the
+    watermark ``dedupe_horizon`` sets; arming it without one raises
+    ValueError. Armed or not, the book runs on the one
+    applyInPandasWithState kernel (operators/book.py).
     """
     if stale_after_s is not None and dedupe_horizon is None:
         raise ValueError(
@@ -186,12 +183,7 @@ def run_pipeline(
     if dedupe_horizon is not None:
         frames = (frames.withWatermark("server_ts", dedupe_horizon)
                   .dropDuplicatesWithinWatermark(["product_id", "seq"]))
-    if stale_after_s is not None:
-        from fictional_guacamole_spark.operators.book_tws import (
-            apply_book_kernel_tws)
-        out = apply_book_kernel_tws(frames, stale_after_s=stale_after_s)
-    else:
-        out = apply_book_kernel(frames)
+    out = apply_book_kernel(frames, stale_after_s=stale_after_s)
     return (out.writeStream
             .foreachBatch(make_batch_writer(
                 sink_dir, fetcher, stale_sink=stale_after_s is not None))

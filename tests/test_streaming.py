@@ -318,31 +318,30 @@ class TestStreamingEndToEnd:
 
 
 class TestTwsBookKernel:
-    """The transformWithState port of the flagship kernel
-    (operators/book_tws.py): run_pipeline's choice of it by the stale
-    alarm, cross-API output equality, the stale-book alarm timer, and
-    batch→stream initial-state bootstrap."""
+    """The stale-book alarm on the book kernel's event-time timeout
+    (operators/book.py): arming it leaves books/trades/gaps and the
+    applyInPandasWithState operator unchanged, refuses a missing
+    watermark, and fires once per stale episode. (The class name is
+    from the transformWithState port this alarm replaced.)"""
 
     def _drain(self, spark, frames, sink, ckpt, **kw):
         """Run the pipeline to completion; returns the names of the
         stateful operators the query executed."""
-        from fictional_guacamole_spark.plans.windows_streaming import (
-            _rocksdb_state_store)
-        with _rocksdb_state_store(spark):
-            q = run_pipeline(frames, sink, ckpt, **kw)
-            try:
-                q.processAllAvailable()
-                return {op["operatorName"] for p in q.recentProgress
-                        for op in p["stateOperators"]}
-            finally:
-                q.stop()
+        q = run_pipeline(frames, sink, ckpt, **kw)
+        try:
+            q.processAllAvailable()
+            return {op["operatorName"] for p in q.recentProgress
+                    for op in p["stateOperators"]}
+        finally:
+            q.stop()
 
     def test_tws_outputs_equal_classic(self, spark, gdax_capture, tmp_path):
-        """Arming the stale alarm switches the book to the tws kernel;
-        books/trades/gaps must not change. Both legs share a watermark
-        wide enough that no fixture frame arrives late."""
+        """Arming the stale alarm keeps the book on the one
+        applyInPandasWithState kernel; books/trades/gaps must not change.
+        Both legs share a watermark wide enough that no fixture frame
+        arrives late."""
         outs, ops = {}, {}
-        for label, stale_after_s in (("classic", None), ("tws", 3600)):
+        for label, stale_after_s in (("unarmed", None), ("armed", 3600)):
             frames = ensure_frame_schema(
                 parse_gdax_frames(read_frames_stream(spark, gdax_capture,
                                                      frames_per_batch=3)))
@@ -356,15 +355,20 @@ class TestTwsBookKernel:
                     tuple(r) for r in spark.read.parquet(f"{sink}/{sub}")
                     .drop("_batch").collect())
                 for sub in ("books", "trades", "gaps")}
-        assert outs["classic"] == outs["tws"]
-        assert all(outs["classic"].values())  # non-vacuous comparison
-        assert "applyInPandasWithState" in ops["classic"]
-        assert any("transformWithState" in o for o in ops["tws"])
+        assert outs["unarmed"] == outs["armed"]
+        assert all(outs["unarmed"].values())  # non-vacuous comparison
+        for label in ("unarmed", "armed"):
+            assert "applyInPandasWithState" in ops[label]
+            assert not any("transformWithState" in o for o in ops[label])
 
     def test_stale_alarm_without_watermark_raises(self, spark, gdax_capture,
                                                   tmp_path):
         """An armed alarm with no watermark would never fire: refuse it
-        before any query starts."""
+        before any query starts. A batch replay has no timeout to arm."""
+        batch = ensure_frame_schema(
+            parse_gdax_frames(read_frames_batch(spark, gdax_capture)))
+        with pytest.raises(ValueError, match="streaming"):
+            apply_book_kernel(batch, stale_after_s=3600)
         frames = ensure_frame_schema(
             parse_gdax_frames(read_frames_stream(spark, gdax_capture,
                                                  frames_per_batch=3)))
@@ -377,279 +381,91 @@ class TestTwsBookKernel:
         assert not (tmp_path / "ckpt").exists()
 
     def test_stale_book_alarm_fires_on_idle_product(self, spark, tmp_path):
-        """Event-time staleness: product A's last frame is >1h before the
-        final watermark → one stale alarm at last_frame + T; product B's
-        last frame IS the watermark → no alarm (its re-armed timer sits
-        past the final watermark forever)."""
-        base = "2024-01-05T10:00:00.000000Z"
-        frames = [
-            json.dumps({"type": "snapshot", "product_id": "A",
-                        "bids": [["100", "1"]], "asks": [["101", "1"]],
-                        "time": base}),
-            json.dumps({"type": "snapshot", "product_id": "B",
-                        "bids": [["200", "1"]], "asks": [["201", "1"]],
-                        "time": base}),
-            json.dumps({"type": "l2update", "product_id": "A",
-                        "changes": [["buy", "100", "2"]],
-                        "time": "2024-01-05T10:00:10.000000Z"}),
-            json.dumps({"type": "l2update", "product_id": "B",
-                        "changes": [["buy", "200", "2"]],
-                        "time": "2024-01-05T12:00:10.000000Z"}),
-        ]
-        cap = write_capture(str(tmp_path / "stale.jsonl"), frames)
-        parsed = ensure_frame_schema(
-            parse_gdax_frames(read_frames_stream(spark, cap,
-                                                 frames_per_batch=2)))
-        sink = str(tmp_path / "stale_sink")
-        self._drain(spark, parsed, sink, str(tmp_path / "stale_ckpt"),
-                    stale_after_s=3600, dedupe_horizon="0 seconds",
-                    query_name="tws_stale")
-        stale = spark.read.parquet(f"{sink}/stale").collect()
-        assert [(r["product_id"], str(r["server_ts"])) for r in stale] == [
-            ("A", "2024-01-05 11:00:10")]
-        # the alarm never perturbs the judged sinks
-        assert spark.read.parquet(f"{sink}/books").count() == 4
+        """Event-time staleness, one case per stream:
 
-    def test_initial_state_bootstraps_book(self, spark, tmp_path):
-        """Batch→stream migration: the book seeds from a batch-computed
-        STATE_SCHEMA snapshot; a streamed delta lands on the SEEDED book
-        (no snapshot frame ever streams)."""
-        from fictional_guacamole_spark.operators.book import OrderBook
-        from fictional_guacamole_spark.operators.book_tws import (
-            apply_book_kernel_tws)
-        from fictional_guacamole_spark.plans.windows_streaming import (
-            _rocksdb_state_store)
+        - idle: product A's last frame is >1h before the final watermark
+          → one alarm at last_frame + T; product B's last frame IS the
+          watermark → no alarm;
+        - behind_watermark: C's first frame lands more than T behind the
+          watermark; its alarm still fires (at 09:01), it does not
+          kill the query;
+        - once_per_episode: A alarms once while idle, is re-armed by its
+          next frame, and alarms once more — never again per trigger;
+        - at_deadline: the final watermark EQUALS A's last frame + T, so
+          A alarms (inclusive deadline), as C, 1 s earlier, does.
+        """
+        def frame(msg_type, pid, ts, px="100"):
+            f = {"type": msg_type, "product_id": pid,
+                 "time": f"2024-01-05T{ts}.000000Z"}
+            if msg_type == "snapshot":
+                f.update(bids=[[px, "1"]], asks=[[str(int(px) + 1), "1"]])
+            else:
+                f["changes"] = [["buy", px, "2"]]
+            return json.dumps(f)
 
-        seeded = OrderBook()
-        seeded.install_snapshot([["100", "1"], ["99", "5"]],
-                                [["101", "2"]])
-        b, a, le, mt = seeded.to_state()
-        init = spark.createDataFrame(
-            [("ETH-USD", b, a, le, mt)],
-            "product_id string, bids_json string, asks_json string, "
-            "last_emitted_json string, max_trade_id long")
-        frames = [json.dumps({"type": "l2update", "product_id": "ETH-USD",
-                              "changes": [["buy", "100", "3"]],
-                              "time": "2024-01-05T10:00:01.000000Z"})]
-        cap = write_capture(str(tmp_path / "init.jsonl"), frames)
-        parsed = ensure_frame_schema(
-            parse_gdax_frames(read_frames_stream(spark, cap,
-                                                 frames_per_batch=1)))
-        out = apply_book_kernel_tws(parsed, initial_state=init)
-        sink = str(tmp_path / "init_sink")
-        with _rocksdb_state_store(spark):
-            q = (out.writeStream.format("parquet")
-                 .option("path", sink)
-                 .option("checkpointLocation", str(tmp_path / "init_ckpt"))
-                 .outputMode("append").queryName("tws_init").start())
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        books = (spark.read.parquet(sink)
-                 .filter(F.col("out_type") == "book").collect())
-        assert len(books) == 1
-        assert books[0]["bids"] == ["3@100", "5@99"]   # seeded + delta
-        assert books[0]["asks"] == ["2@101"]           # seeded only
-
-    def test_bootstrapped_silent_product_raises_stale_alarm(self, spark,
-                                                            tmp_path):
-        """A product seeded via handleInitialState whose feed never
-        streams a frame is the dead-feed case the stale alarm exists
-        for: its timer arms from the initial state's as_of_ts cut point
-        and fires when the watermark passes it. The streamed product's
-        own (re-armed) timer sits past the final watermark — no alarm."""
-        import datetime as dt
-
-        from fictional_guacamole_spark.operators.book import OrderBook
-        from fictional_guacamole_spark.operators.book_tws import (
-            apply_book_kernel_tws)
-        from fictional_guacamole_spark.plans.windows_streaming import (
-            _rocksdb_state_store)
-
-        seeded = OrderBook()
-        seeded.install_snapshot([["100", "1"]], [["101", "2"]])
-        b, a, le, mt = seeded.to_state()
-        as_of = dt.datetime(2024, 1, 5, 10, 0, 0)
-        init = spark.createDataFrame(
-            [("SILENT", b, a, le, mt, as_of),
-             ("LIVE", b, a, le, mt, as_of)],
-            "product_id string, bids_json string, asks_json string, "
-            "last_emitted_json string, max_trade_id long, "
-            "as_of_ts timestamp")
-        frames = [json.dumps({"type": "l2update", "product_id": "LIVE",
-                              "changes": [["buy", "100", "3"]],
-                              "time": "2024-01-05T11:00:00.000000Z"})]
-        cap = write_capture(str(tmp_path / "silent.jsonl"), frames)
-        parsed = (ensure_frame_schema(
-            parse_gdax_frames(read_frames_stream(spark, cap,
-                                                 frames_per_batch=1)))
-            .withWatermark("server_ts", "0 seconds"))
-        out = apply_book_kernel_tws(parsed, stale_after_s=60,
-                                    initial_state=init)
-        sink = str(tmp_path / "silent_sink")
-        with _rocksdb_state_store(spark):
-            q = (out.writeStream.format("parquet")
-                 .option("path", sink)
-                 .option("checkpointLocation", str(tmp_path / "silent_ck"))
-                 .outputMode("append").queryName("tws_silent").start())
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        rows = spark.read.parquet(sink)
-        stale = rows.filter(F.col("out_type") == "stale").collect()
-        # SILENT alarms at cut point + 60s; LIVE's re-armed timer is past
-        # the final watermark (11:00) and never fires
-        assert [(r["product_id"], str(r["server_ts"])) for r in stale] == [
-            ("SILENT", "2024-01-05 10:01:00")]
-
-
-class _TwsCountProcessor:
-    """Minimal tws processor for the serializer tripwire: counts rows per
-    key, touches no state. Defined at module scope so cloudpickle's
-    by-value registration can ship it; the crash under test happens in
-    the INPUT serializer, before this code ever runs."""
-
-
-def _build_tws_count_processor():
-    from fictional_guacamole_spark.operators.gap_alarm import (
-        _ensure_protobuf)
-    _ensure_protobuf(required=True)
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class P(StatefulProcessor, _TwsCountProcessor):
-        def __init__(self):
-            # a non-empty __dict__ is load-bearing: pickle skips
-            # __setstate__ entirely for stateless instances, and the
-            # protobuf fallback must run at unpickle time in the
-            # driver-side worker
-            self.tag = "tripwire"
-
-        def __setstate__(self, state):
-            _ensure_protobuf()
-            self.__dict__.update(state)
-
-        def init(self, handle):
-            self.seen = handle.getValueState("seen", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
-            n = sum(len(pdf) for pdf in rows)
-            prev = self.seen.get()[0] if self.seen.exists() else 0
-            self.seen.update((prev + n,))
-            yield _pd.DataFrame({"k": [key[0]], "n": [prev + n]})
-
-        def close(self):
-            pass
-
-    return P()
-
-
-class TestTwsNestedArrayTripwire:
-    """UPSTREAM-BUG TRIPWIRE (r13 verdict task #4). This test passes
-    BECAUSE pyspark's transformWithStateInPandas input serializer
-    (sql/pandas/serializers.py row_stream → per-row arrow_to_pandas)
-    segfaults on array<array<string>> input columns whenever a grouping
-    key spans more than one row in a batch. book_tws.py works around it
-    by JSON-encoding the nested level arrays across the Arrow boundary
-    (_NESTED_COLS, book_tws.py:139-141,198-199) — an extra encode/decode
-    per frame. When a pyspark upgrade fixes the serializer, the nested
-    leg below will succeed, this test will FAIL LOUDLY, and the JSON
-    detour should be retired."""
-
-    def _run(self, spark, tmp_path, tag, nested):
-        import sys
-
-        from pyspark import cloudpickle
-        from pyspark.sql.types import (ArrayType, LongType, StringType,
-                                       StructField, StructType)
-
-        from fictional_guacamole_spark.operators import gap_alarm as _ga
-        from fictional_guacamole_spark.plans.windows_streaming import (
-            _rocksdb_state_store)
-
-        cloudpickle.register_pickle_by_value(sys.modules[_ga.__name__])
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-        lvl = ArrayType(ArrayType(StringType())) if nested \
-            else ArrayType(StringType())
-        schema = StructType([StructField("k", LongType()),
-                             StructField("levels", lvl)])
-        # the minimal repro shape: TWO rows under ONE grouping key
-        val = [["1", "2"]] if nested else ["1", "2"]
-        src = tmp_path / f"src_{tag}"
-        spark.createDataFrame([(1, val), (1, val)], schema) \
-            .coalesce(1).write.parquet(str(src))
-
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        out = (stream.groupBy("k").transformWithStateInPandas(
-            _build_tws_count_processor(),
-            outputStructType="k long, n long",
-            outputMode="append", timeMode="none"))
-        with _rocksdb_state_store(spark):
-            q = (out.writeStream.format("memory")
-                 .queryName(f"tws_tripwire_{tag}")
-                 .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-                 .outputMode("append").start())
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        return {(r["k"], r["n"])
-                for r in spark.table(f"tws_tripwire_{tag}").collect()}
-
-    def test_nested_array_input_still_crashes_the_worker(self, spark,
-                                                         tmp_path):
-        import pytest
-        from pyspark.errors.exceptions.base import PySparkException
-
-        # control leg: the SAME frames with a flat array<string> column
-        # must drain fine — if this leg fails, the environment (not the
-        # serializer bug) is broken and the tripwire is inconclusive
-        assert self._run(spark, tmp_path, "flat", nested=False) == {(1, 2)}
-
-        # tripwire leg: array<array<string>> with a key spanning 2 rows
-        try:
-            got = self._run(spark, tmp_path, "nested", nested=True)
-        except PySparkException:
-            return  # the upstream bug is still present — workaround stands
-        pytest.fail(
-            "pyspark's transformWithStateInPandas serializer now handles "
-            f"array<array<string>> input (drained {got}) — the upstream "
-            "segfault is FIXED. Retire the JSON-text detour in "
-            "operators/book_tws.py (_NESTED_COLS: to_json at the wiring, "
-            "json.loads in the processor) and route the nested level "
-            "arrays across the Arrow boundary natively.")
+        cases = {
+            "idle": dict(
+                frames=[frame("snapshot", "A", "10:00:00"),
+                        frame("snapshot", "B", "10:00:00", "200"),
+                        frame("l2update", "A", "10:00:10"),
+                        frame("l2update", "B", "12:00:10", "200")],
+                frames_per_batch=2, stale_after_s=3600,
+                dedupe_horizon="0 seconds",
+                stale=[("A", "2024-01-05 11:00:10")], books=4),
+            "behind_watermark": dict(
+                frames=[frame("snapshot", "A", "10:00:00"),
+                        frame("snapshot", "B", "12:00:00"),
+                        frame("snapshot", "C", "09:00:00"),
+                        frame("l2update", "B", "14:00:00"),
+                        frame("l2update", "B", "14:00:01")],
+                frames_per_batch=1, stale_after_s=60,
+                dedupe_horizon="2 hours",
+                stale=[("A", "2024-01-05 10:01:00"),
+                       ("C", "2024-01-05 09:01:00")], books=None),
+            "once_per_episode": dict(
+                frames=[frame("snapshot", "A", "10:00:00"),
+                        frame("snapshot", "B", "10:00:00"),
+                        frame("l2update", "B", "12:00:00"),
+                        frame("l2update", "B", "12:00:01"),
+                        frame("l2update", "A", "12:30:00"),
+                        frame("l2update", "B", "14:00:00"),
+                        frame("l2update", "B", "14:00:01"),
+                        frame("l2update", "B", "14:00:02"),
+                        frame("l2update", "B", "14:00:03")],
+                frames_per_batch=1, stale_after_s=3600,
+                dedupe_horizon="0 seconds",
+                stale=[("A", "2024-01-05 11:00:00"),
+                       ("A", "2024-01-05 13:30:00")], books=None),
+            "at_deadline": dict(
+                frames=[frame("snapshot", "A", "10:00:00"),
+                        frame("snapshot", "C", "09:59:59"),
+                        frame("snapshot", "B", "10:01:00")],
+                frames_per_batch=1, stale_after_s=60,
+                dedupe_horizon="0 seconds",
+                stale=[("A", "2024-01-05 10:01:00"),
+                       ("C", "2024-01-05 10:00:59")], books=None),
+        }
+        for name, case in cases.items():
+            cap = write_capture(str(tmp_path / f"{name}.jsonl"),
+                                case["frames"])
+            parsed = ensure_frame_schema(parse_gdax_frames(
+                read_frames_stream(spark, cap,
+                                   frames_per_batch=case["frames_per_batch"])))
+            sink = str(tmp_path / f"{name}_sink")
+            self._drain(spark, parsed, sink, str(tmp_path / f"{name}_ckpt"),
+                        stale_after_s=case["stale_after_s"],
+                        dedupe_horizon=case["dedupe_horizon"],
+                        query_name=f"tws_stale_{name}")
+            stale = spark.read.parquet(f"{sink}/stale").collect()
+            assert sorted((r["product_id"], str(r["server_ts"]))
+                          for r in stale) == case["stale"], name
+            if case["books"] is not None:
+                # the alarm never perturbs the judged sinks
+                assert (spark.read.parquet(f"{sink}/books").count()
+                        == case["books"])
 
 
 class TestStateTtl:
-    def test_ttl_stream_produces_same_active_output(self, spark,
-                                                    gdax_capture, tmp_path):
-        """With a long TTL no eviction fires mid-run: outputs must equal
-        the no-TTL run (the TTL wiring is exercised end-to-end; eviction
-        semantics == reconnect re-snapshot, per make_book_kernel)."""
-        from fictional_guacamole_spark.operators.book import apply_book_kernel
-        frames = ensure_frame_schema(
-            parse_gdax_frames(read_frames_stream(spark, gdax_capture,
-                                                 frames_per_batch=100)))
-        out = apply_book_kernel(frames, state_ttl_ms=3_600_000)
-        # availableNow: drain everything then stop — processAllAvailable
-        # never settles once processing-time timeouts are registered
-        q = (out.writeStream.format("memory").queryName("ttl_books")
-             .outputMode("append")
-             .option("checkpointLocation", str(tmp_path / "ck"))
-             .trigger(availableNow=True)
-             .start())
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        rows = spark.table("ttl_books")
-        assert rows.filter(F.col("out_type") == "book").count() == 3
-        assert rows.filter(F.col("out_type") == "trade").count() == 2
-        assert rows.filter(F.col("out_type") == "gap").count() == 1
-
     def test_tws_value_state_ttl_expires_between_batches(self, spark,
                                                          tmp_path):
         """transformWithState TTLConfig: a ValueState behind a 10ms TTL

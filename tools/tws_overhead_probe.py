@@ -51,7 +51,7 @@ _ARR_VAL = [f"{i}@10{i}" for i in range(15)]
 
 class _TwsNoopBase:
     """Module-scope anchor so cloudpickle by-value registration covers
-    the processor class (see operators/book_tws._register_by_value)."""
+    the processor class (see operators/gap_alarm._register_by_value)."""
 
 
 def _build_noop_processor():
