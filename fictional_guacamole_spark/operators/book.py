@@ -455,7 +455,10 @@ def make_book_kernel(stale_after_s: int | None = None):
     watermark reaches it with no newer frame, the key emits one
     ``out_type="stale"`` row stamped at the deadline and clears the
     anchor; that state write drops the timeout, so the alarm fires once
-    per stale episode and the next frame re-arms it.
+    per stale episode and the next frame re-arms it. A product whose
+    first frame lands more than T behind the watermark cannot arm a
+    timeout behind it, so it alarms on the next watermark advance, not
+    in the same trigger.
     """
     stale_after_ms = None if stale_after_s is None else stale_after_s * 1000
 

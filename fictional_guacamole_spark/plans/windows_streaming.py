@@ -2536,9 +2536,10 @@ def stream_engine_tws_ttl_counter(spark: SparkSession,
     def land(batch_df, batch_id):
         if batch_df.isEmpty():   # processing-time no-data housekeeping
             return               # batches carry nothing to land
-        # _batch=<id> dynamic overwrite (the make_batch_writer pattern):
-        # a foreachBatch retry after a transient failure REPLACES its own
-        # partition instead of double-landing the batch (r13 advisor);
+        # _batch=<id> dynamic overwrite (per batch id, like the stream
+        # pipeline's sinks): a foreachBatch retry after a transient
+        # failure REPLACES its own partition instead of double-landing
+        # the batch (r13 advisor);
         # the landed set (not a counter) keeps replays from ending the
         # drain early
         (batch_df.withColumn("_batch", F.lit(batch_id))

@@ -47,9 +47,10 @@ def get_spark(app_name: str = "fictional_guacamole_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # RocksDB state store: streaming state lives off-heap/on-disk per
         # executor instead of in the JVM heap — the backend that holds at
-        # 100 TB state volumes (changelog checkpointing keeps commits
-        # incremental). Bundled with Spark 4; used by the book kernel and
-        # every watermarked aggregation.
+        # 100 TB state volumes. Changelog checkpointing is left at its
+        # default (off), so every state commit uploads a snapshot.
+        # Bundled with Spark 4; used by the book kernel and every
+        # watermarked aggregation.
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state."
                 "RocksDBStateStoreProvider")

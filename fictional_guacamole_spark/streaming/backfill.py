@@ -9,15 +9,14 @@ bookkeeping of filled vs still-missing ids, audit logging of anything
 unrecoverable. The REST client is pluggable (tests inject a canned
 fetcher; a live deployment wires a ccxt-style client).
 
-Where it runs: inside ``foreachBatch``, EXECUTOR-SIDE — ``repair_frame``
-maps the fetcher over the batch's gap RANGES (small: ranges, never rows)
-with ``mapInPandas``, in the partitions the stateful kernel left them in,
-so repaired trades are born distributed and land in the batch's own
-idempotent write. As in the reference's single backfill worker, one task
-pages each range: gaps are coalesced per product, so an outage is one
-range and no reshuffle could split it. The driver never materializes a
-repaired row. ``backfill_gaps`` remains the per-partition kernel (and the
-driver-side form for unit tests).
+Where it runs: inside the batch writer's one action, EXECUTOR-SIDE — each
+task of the stateful kernel's output calls :func:`backfill_gaps` on the gap
+RANGES it holds (small: ranges, never rows), and the repaired trades are
+staged with the task's live trades into the batch's one idempotent
+publish (streaming/pipeline.py::make_batch_writer). As in the reference's
+single backfill worker, one task pages each range: the kernel
+hash-partitions by product, gaps are coalesced per product, so an outage
+is one range in one task. The driver never materializes a repaired row.
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ import math
 from typing import TYPE_CHECKING, Callable, Iterable
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import SparkSession
 
 logger = logging.getLogger("fictional_guacamole_spark.backfill")
 
@@ -83,70 +82,8 @@ def backfill_gaps(gaps: Iterable[dict], fetcher: Fetcher) -> list[dict]:
     return repaired
 
 
-# repaired-trade frame schema, in sink order (pipeline.TRADE_COLS)
-_REPAIR_SCHEMA = ("product_id string, server_ts timestamp, "
-                  "exchange_ts timestamp, sequence long, trade_id long, "
-                  "price string, volume string, side string, "
-                  "backfilled boolean")
-
-
 def _repair_partitions(spark: "SparkSession") -> int:
-    """Tasks one repair runs: ``repair_frame`` adds no shuffle, so this is
-    the stateful kernel's partition count, which for a fresh checkpoint
-    is ``spark.sql.shuffle.partitions``."""
+    """Tasks one repair runs: the batch writer repairs inside the
+    stateful kernel's own tasks, so this is the kernel's partition count,
+    which for a fresh checkpoint is ``spark.sql.shuffle.partitions``."""
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-def repair_frame(gaps: "DataFrame", fetcher: Fetcher) -> "DataFrame":
-    """Distributed T6 repair: gap ranges in, repaired trades out.
-
-    Each task of ``gaps`` runs the :func:`backfill_gaps` paging kernel
-    against the ranges it already holds and yields Arrow batches of
-    repaired trades; no stage is added, so the repair keeps ``gaps``'s
-    partitioning (the kernel's, hash by ``product_id``). Rows are born on
-    executors and the output unions straight into the batch's idempotent
-    trades write."""
-    import sys
-
-    import pandas as pd
-
-    # the fetcher is user-supplied and often lives in a module executor
-    # workers can't import (a test file, a deploy script); register its
-    # module for by-value pickling so the callable travels inside the
-    # mapInPandas closure itself (same fix as pyds._register_by_value)
-    mod = sys.modules.get(getattr(fetcher, "__module__", "") or "")
-    if mod is not None and not mod.__name__.startswith(
-            ("fictional_guacamole_spark", "pyspark")):
-        try:
-            from pyspark import cloudpickle
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:  # __main__ / builtins: already pickled by value
-            pass
-
-    def fetch(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rep = backfill_gaps(pdf.to_dict("records"), fetcher)
-            if not rep:
-                continue
-            yield pd.DataFrame({
-                "product_id": pd.Series(
-                    [r["product_id"] for r in rep], dtype="object"),
-                "server_ts": pd.to_datetime([r["server_ts"] for r in rep]),
-                "exchange_ts": pd.to_datetime(
-                    [r["exchange_ts"] for r in rep]),
-                "sequence": pd.array(
-                    [r["sequence"] for r in rep], dtype="Int64"),
-                "trade_id": pd.array(
-                    [r["trade_id"] for r in rep], dtype="Int64"),
-                "price": pd.Series([r["price"] for r in rep],
-                                   dtype="object"),
-                "volume": pd.Series([r["volume"] for r in rep],
-                                    dtype="object"),
-                "side": pd.Series([r["side"] for r in rep], dtype="object"),
-                "backfilled": pd.Series([True] * len(rep), dtype="bool"),
-            })
-
-    ranges = gaps.select("product_id", "gap_first_id", "gap_last_id")
-    return ranges.mapInPandas(fetch, schema=_REPAIR_SCHEMA)

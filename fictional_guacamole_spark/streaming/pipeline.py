@@ -4,44 +4,49 @@ schema-compat views that reproduce the reference's exact table shapes.
 Lifecycle (SURVEY.md §3.4): a raw frame stream (websocket live / replay in
 tests) is parsed to FRAME_SCHEMA (streaming/frames.py), run through one
 ``applyInPandasWithState`` kernel keyed by product_id (operators/book.py),
-and the tagged output is demuxed in ``foreachBatch`` into three parquet
-sink tables — book snapshots, trades, gap audit — with trade gaps repaired
-by the backfill operator before the batch commits. Micro-batches replace
-the reference's Redis hand-off (T7); the per-row-INSERT sink
+and ``foreachBatch`` writes each tagged micro-batch in ONE action: the
+kernel's tasks repair their trade gaps and stage the parquet sinks — book
+snapshots, trades, gap audit — that the driver publishes. Micro-batches
+replace the reference's Redis hand-off (T7); the per-row-INSERT sink
 (/root/reference/db_utils.py:24-31) becomes vectorized columnar appends.
 
 Scale posture: sink tables are partitioned by product_id (and date at
 cluster scale); the stateful shuffle is keyed by product_id so book state
-for distinct products lives on distinct executors; checkpointing makes
-restarts exactly-once into the idempotent parquet appends.
+for distinct products lives on distinct executors; checkpointing plus the
+per-batch publish makes restarts exactly-once.
 """
 
 from __future__ import annotations
 
+import glob
 import logging
 import os
+import shutil
+import sys
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fictional_guacamole_spark.operators.book import (
     BOOK_DEPTH, apply_book_kernel)
-from fictional_guacamole_spark.streaming.backfill import Fetcher, repair_frame
-
-TRADE_SINK_SCHEMA = ("product_id string, server_ts timestamp, "
-                     "exchange_ts timestamp, sequence long, trade_id long, "
-                     "price string, volume string, side string, "
-                     "backfilled boolean")
+from fictional_guacamole_spark.streaming.backfill import Fetcher, backfill_gaps
 
 BOOK_COLS = ["product_id", "server_ts", "bids", "asks"]
 TRADE_COLS = ["product_id", "server_ts", "exchange_ts", "sequence",
               "trade_id", "price", "volume", "side", "backfilled"]
 GAP_COLS = ["product_id", "server_ts", "gap_first_id", "gap_last_id"]
+STALE_COLS = ["product_id", "server_ts"]
+
+# out_type → (sink directory, columns in its files); product_id is the
+# partition column, so it lives in the path only
+SINKS = {out_type: (sub, [c for c in cols if c != "product_id"])
+         for out_type, sub, cols in [("book", "books", BOOK_COLS),
+                                     ("trade", "trades", TRADE_COLS),
+                                     ("gap", "gaps", GAP_COLS),
+                                     ("stale", "stale", STALE_COLS)]}
 
 logger = logging.getLogger("fictional_guacamole_spark.pipeline")
-
-
-STALE_COLS = ["product_id", "server_ts"]
 
 
 def demux_outputs(out: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -52,95 +57,141 @@ def demux_outputs(out: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     return books, trades, gaps
 
 
-# Bound on gap RANGES repaired per micro-batch. Gaps arrive as coalesced
-# ranges (SURVEY §2.1 S3), so in normal operation this is single digits —
-# but an exchange outage can emit an outage-sized burst, and repairing an
-# unbounded burst in one batch would stall the trigger behind REST paging.
-# The repair itself is executor-side (backfill.repair_frame maps the
-# fetcher over the ranges frame), so the cap bounds trigger LATENCY, not
-# driver memory. Ranges past the cap are NOT repaired in-batch; they
-# remain durably recorded in the gaps sink, and a later repair pass can
-# find them by anti-joining the gaps sink against backfilled trades.
+# Bound on gap RANGES repaired per writer TASK in a micro-batch. Gaps
+# arrive as coalesced ranges (SURVEY §2.1 S3), so normally single digits,
+# but an outage-sized burst would stall the trigger behind REST paging.
+# The kernel hash-partitions by product_id, so a product's ranges share
+# one task and the cap is never stricter than a per-batch one. Ranges
+# past it stay durably recorded in the gaps sink, unrepaired; a later
+# pass can find them by anti-joining gaps against backfilled trades.
 MAX_BACKFILL_RANGES_PER_BATCH = int(
     os.environ.get("SPARK_GRAFT_MAX_BACKFILL_RANGES", "10000"))
 
+# characters Spark's writer escapes in partition values (%XX)
+_ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+
+
+def _partition_dir(product: str | None) -> str:
+    """``product_id=<p>``, named as Spark's partitioned writer names it."""
+    if product is None:
+        return "product_id=__HIVE_DEFAULT_PARTITION__"
+    return "product_id=" + "".join(
+        f"%{ord(c):02X}" if c in _ESCAPED else c for c in product)
+
+
+def _stage_task(stage: str, fetcher: Fetcher | None, max_ranges: int):
+    """The writer's mapInArrow function: one kernel task's rows in,
+    staged as parquet under ``stage`` with its gaps repaired; one
+    ``(rows, past_cap)`` commit row out."""
+
+    def task(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        batches = list(batches)
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        # timestamps are UTC instants whatever the session time zone
+        tbl = tbl.cast(pa.schema(
+            [f.with_type(pa.timestamp("us", "UTC"))
+             if pa.types.is_timestamp(f.type) else f for f in tbl.schema]))
+        past_cap = 0
+        if fetcher is not None:
+            ranges = tbl.filter(pc.equal(tbl["out_type"], "gap")).select(
+                ["product_id", "gap_first_id", "gap_last_id"]).to_pylist()
+            past_cap = max(0, len(ranges) - max_ranges)
+            repaired = backfill_gaps(ranges[:max_ranges], fetcher)
+            if repaired:
+                tbl = pa.concat_tables(
+                    [tbl, pa.Table.from_pylist(repaired, schema=tbl.schema)])
+        # one file per (sink, product) per task; a retried task rewrites
+        # its own file instead of adding a second one
+        part = f"part-{TaskContext.get().partitionId():05d}.parquet"
+        for out_type in pc.unique(tbl["out_type"]).to_pylist():
+            if out_type not in SINKS:
+                continue
+            sub, cols = SINKS[out_type]
+            rows = tbl.filter(pc.equal(tbl["out_type"], out_type))
+            pid = rows["product_id"]
+            for product in pc.unique(pid).to_pylist():
+                mask = (pc.is_null(pid) if product is None
+                        else pc.equal(pid, product))
+                out_dir = os.path.join(stage, sub, _partition_dir(product))
+                os.makedirs(out_dir, exist_ok=True)
+                pq.write_table(rows.filter(mask).select(cols),
+                               os.path.join(out_dir, part))
+        yield pa.RecordBatch.from_pydict(
+            {"rows": [tbl.num_rows], "past_cap": [past_cap]})
+
+    return task
+
 
 def make_batch_writer(sink_dir: str, fetcher: Fetcher | None = None,
-                      max_backfill_ranges: int = MAX_BACKFILL_RANGES_PER_BATCH,
-                      stale_sink: bool = False):
-    """Build the foreachBatch callable (factored out so the overflow path
-    is testable without a live stream). ``stale_sink``: also demux
-    ``out_type="stale"`` alarm rows (the book kernel's stale-book
-    timeout) into their own parquet sink."""
+                      max_backfill_ranges: int = MAX_BACKFILL_RANGES_PER_BATCH):
+    """Build the foreachBatch callable; each trigger runs ONE action.
 
-    def write_idempotent(df: DataFrame, sub: str, batch_id: int) -> None:
-        """Exactly-once append: each write lands in a `_batch=<id>`
-        partition with dynamic overwrite, so a replayed micro-batch (after
-        a crash between sink write and checkpoint commit) REPLACES its own
-        partition instead of duplicating rows. This is the parquet
-        equivalent of a transactional sink's (queryId, batchId) dedup."""
-        (df.withColumn("_batch", F.lit(batch_id))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_batch", "product_id")
-         .parquet(os.path.join(sink_dir, sub)))
+    Each task of the kernel's output repairs the gap ranges it holds (at
+    most ``max_backfill_ranges``) and stages one parquet file per (sink,
+    product) under ``<sink_dir>/_staging/<batch_id>-<uuid>/``. The driver
+    then replaces each sink's ``_batch=<id>`` with the staged one, so a
+    replayed micro-batch replaces the whole batch instead of duplicating
+    rows, and removes the batch's staging directories whether the attempt
+    succeeded or not. Sinks: books/, trades/, gaps/, and stale/ when the
+    stale-book alarm fires.
+
+    ``sink_dir`` is a local path (or a mount every executor sees at the
+    same path), as every caller passes: tasks write it with pyarrow and
+    the driver publishes with ``os.replace``.
+    """
+    # the fetcher is user-supplied and often lives in a module executor
+    # workers can't import (a test file, a deploy script); register its
+    # module for by-value pickling so the callable travels inside the
+    # task closure itself (same fix as pyds._register_by_value)
+    mod = sys.modules.get(getattr(fetcher, "__module__", "") or "")
+    if mod is not None and not mod.__name__.startswith(
+            ("fictional_guacamole_spark", "pyspark")):
+        try:
+            from pyspark import cloudpickle
+            cloudpickle.register_pickle_by_value(mod)
+        except Exception:  # __main__ / builtins: already pickled by value
+            pass
+    staging = os.path.join(sink_dir, "_staging")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # CACHE the micro-batch before demuxing (r14, measured at sf1):
-        # every foreachBatch ACTION re-executes the batch plan from the
-        # source — INCLUDING the stateful kernel and its state-store
-        # round trips — and this writer runs 3 actions per healthy batch
-        # (books write, gap count, trades write) plus the gap audit when
-        # there are gaps and 2 more with the stale sink armed. persist()
-        # makes the kernel run once per trigger (the multi-sink
-        # foreachBatch pattern Spark's own docs prescribe); values are
-        # unchanged, only execution count.
-        batch_df.persist()
+        stage = os.path.join(staging, f"{batch_id}-{uuid.uuid4().hex}")
         try:
-            books, trades, gaps = demux_outputs(batch_df)
-            write_idempotent(books, "books", batch_id)
-            # gaps are empty for most healthy micro-batches: count once
-            # and gate the repair, the cap warning and the audit sink on it
-            n_ranges = gaps.count()
-            # backfill BEFORE the trades write so live + repaired rows
-            # land in one idempotent write (a second write into the same
-            # _batch partition would overwrite the first). The repair is
-            # fully executor-side: the bounded RANGES frame (never rows —
-            # see MAX_BACKFILL_RANGES_PER_BATCH above) maps through the
-            # fetcher with mapInPandas, so an outage-sized gap expands to
-            # its id width inside executor tasks, and the driver never
-            # holds a repaired row (r12 verdict weak-row fix).
-            if fetcher is not None and n_ranges:
-                ranges = gaps
-                # a burst past the cap is LOUD — the dropped ranges stay
-                # durable in the gaps sink below, but silence here would
-                # contradict the engine's no-silent-caps posture. limit()
-                # collapses the ranges to one partition, so only this
-                # branch takes it.
-                if n_ranges > max_backfill_ranges:
-                    logger.warning(
-                        "backfill cap hit in batch %d: %d gap ranges "
-                        "exceed max_backfill_ranges=%d; %d ranges NOT "
-                        "repaired in-batch (recorded in the gaps sink; "
-                        "raise SPARK_GRAFT_MAX_BACKFILL_RANGES or run a "
-                        "catch-up pass)", batch_id, n_ranges,
-                        max_backfill_ranges,
-                        n_ranges - max_backfill_ranges)
-                    ranges = gaps.limit(max_backfill_ranges)
-                repaired = repair_frame(ranges, fetcher)
-                trades = trades.unionByName(repaired.select(*TRADE_COLS))
-            write_idempotent(trades, "trades", batch_id)
-            if n_ranges:
-                # the FULL distributed gaps frame — including any ranges
-                # past the in-batch repair cap — lands in the audit sink
-                write_idempotent(gaps, "gaps", batch_id)
-            if stale_sink:
-                stale = (batch_df.filter(F.col("out_type") == "stale")
-                         .select(*STALE_COLS))
-                if not stale.isEmpty():
-                    write_idempotent(stale, "stale", batch_id)
+            commits = batch_df.mapInArrow(
+                _stage_task(stage, fetcher, max_backfill_ranges),
+                "rows long, past_cap long").collect()
+            past_cap = sum(c.past_cap for c in commits)
+            if past_cap:
+                # a burst past the cap is LOUD — the unrepaired ranges
+                # stay durable in the gaps sink, but silence here would
+                # contradict the engine's no-silent-caps posture
+                logger.warning(
+                    "backfill cap hit in batch %d: %d ranges NOT repaired "
+                    "in-batch, past max_backfill_ranges=%d per task "
+                    "(recorded in the gaps sink; raise "
+                    "SPARK_GRAFT_MAX_BACKFILL_RANGES or run a catch-up "
+                    "pass)", batch_id, past_cap, max_backfill_ranges)
+            for sub, _cols in SINKS.values():
+                final = os.path.join(sink_dir, sub, f"_batch={batch_id}")
+                shutil.rmtree(final, ignore_errors=True)
+                if os.path.isdir(os.path.join(stage, sub)):
+                    os.makedirs(os.path.dirname(final), exist_ok=True)
+                    os.replace(os.path.join(stage, sub), final)
+            logger.debug("batch %d: published %d rows", batch_id,
+                         sum(c.rows for c in commits))
         finally:
-            batch_df.unpersist()
+            for leftover in glob.glob(os.path.join(staging, f"{batch_id}-*")):
+                shutil.rmtree(leftover, ignore_errors=True)
+            try:
+                os.rmdir(staging)
+            except OSError:  # already gone, or not empty
+                pass
 
     return write_batch
 
@@ -156,9 +207,9 @@ def run_pipeline(
 ):
     """Start the streaming query over an already-parsed FRAME_SCHEMA stream.
 
-    Returns the StreamingQuery. Sinks are parquet directories under
-    ``sink_dir``: books/, trades/, gaps/ (+ stale/ with the stale-book
-    alarm armed).
+    Returns the StreamingQuery. Sinks are parquet directories under the
+    local path ``sink_dir``: books/, trades/, gaps/ (+ stale/ with the
+    stale-book alarm armed), written by :func:`make_batch_writer`.
 
     ``dedupe_horizon`` (e.g. ``"10 minutes"``): drop re-delivered frames by
     (product_id, seq) within an event-time watermark BEFORE the stateful
@@ -173,7 +224,10 @@ def run_pipeline(
     that many event-time seconds without a frame gets one row in stale/.
     The alarm is the book kernel's event-time timeout, so it needs the
     watermark ``dedupe_horizon`` sets; arming it without one raises
-    ValueError. Armed or not, the book runs on the one
+    ValueError. The row lands in the trigger whose watermark reaches the
+    deadline; a product whose first frame lands more than that many
+    seconds behind the watermark alarms on the next watermark advance,
+    not in the same trigger. Armed or not, the book runs on the one
     applyInPandasWithState kernel (operators/book.py).
     """
     if stale_after_s is not None and dedupe_horizon is None:
@@ -185,8 +239,7 @@ def run_pipeline(
                   .dropDuplicatesWithinWatermark(["product_id", "seq"]))
     out = apply_book_kernel(frames, stale_after_s=stale_after_s)
     return (out.writeStream
-            .foreachBatch(make_batch_writer(
-                sink_dir, fetcher, stale_sink=stale_after_s is not None))
+            .foreachBatch(make_batch_writer(sink_dir, fetcher))
             .outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
             .queryName(query_name)

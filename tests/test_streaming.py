@@ -14,8 +14,7 @@ from pyspark.sql import functions as F
 from fictional_guacamole_spark.operators.book import apply_book_kernel
 from fictional_guacamole_spark.sources.replay import (
     read_frames_batch, read_frames_stream, write_capture)
-from fictional_guacamole_spark.streaming.backfill import (
-    backfill_gaps, repair_frame)
+from fictional_guacamole_spark.streaming.backfill import backfill_gaps
 from fictional_guacamole_spark.streaming.frames import (
     ensure_frame_schema, parse_gdax_frames, parse_polo_frames)
 from fictional_guacamole_spark.streaming.pipeline import (
@@ -219,29 +218,6 @@ class TestBackfill:
         repaired = backfill_gaps(gaps, lambda p, a: [])
         assert repaired == []
 
-    def test_repair_frame_keeps_gap_partitions(self, spark):
-        """The repair pages each range in the task that already holds it:
-        no Exchange of its own, same rows as the driver-side kernel."""
-        ranges = [{"product_id": p, "gap_first_id": a, "gap_last_id": b}
-                  for p, a, b in [("ETH-USD", 101, 102), ("BTC-USD", 95, 97),
-                                  ("LTC-USD", 105, 105), ("ETH-USD", 91, 91)]]
-        gaps = spark.createDataFrame(
-            ranges, "product_id string, gap_first_id long, gap_last_id long"
-        ).repartition(3, "product_id")   # the kernel's hash partitioning
-        repaired = repair_frame(gaps, canned_fetcher)
-
-        def exchanges(df):
-            return df._jdf.queryExecution().executedPlan().toString() \
-                .count("Exchange")
-
-        assert repaired.rdd.getNumPartitions() == gaps.rdd.getNumPartitions()
-        assert exchanges(repaired) == exchanges(gaps)
-        cols = ["product_id", "trade_id", "price", "volume", "side",
-                "backfilled"]
-        assert sorted(tuple(r[c] for c in cols) for r in repaired.collect()) \
-            == sorted(tuple(r[c] for c in cols)
-                      for r in backfill_gaps(ranges, canned_fetcher))
-
 
 class TestStreamingEndToEnd:
     def test_replay_stream_through_pipeline(self, spark, gdax_capture,
@@ -315,6 +291,83 @@ class TestStreamingEndToEnd:
         q2.stop()
         trades = spark.read.parquet(f"{sink}/trades")
         assert trades.count() == 2  # not doubled
+
+    def test_failed_trigger_replays_exactly_once(self, spark, gdax_capture,
+                                                 tmp_path):
+        """A trigger that dies after its sink writes began replays on
+        restart and lands exactly once:
+
+        - fetch_fails: the fetcher raises on its first call (the gap
+          batch), so the query dies mid-trigger; the restart on the same
+          checkpoint repairs the gap;
+        - commit_lost: a clean run loses its last ``commits/<id>`` file
+          (a crash between the sink writes and the commit), so the
+          restart replays that batch over sinks that already hold it.
+
+        Either way books, trades and gaps equal a clean run of the same
+        frames, and no staging directory is left behind."""
+        from collections import Counter
+        from pathlib import Path
+
+        marker = tmp_path / "fetcher_failed"
+
+        def failing_once_fetcher(product_id, after_id):
+            # a file, not a flag: the fetcher runs in worker processes
+            if not marker.exists():
+                marker.touch()
+                raise RuntimeError("injected backfill failure")
+            return canned_fetcher(product_id, after_id)
+
+        def start(sink, ckpt, fetcher, name):
+            frames = ensure_frame_schema(
+                parse_gdax_frames(read_frames_stream(spark, gdax_capture,
+                                                     frames_per_batch=3)))
+            return run_pipeline(frames, str(sink), str(ckpt),
+                                fetcher=fetcher, query_name=name)
+
+        def drain(sink, ckpt, fetcher, name):
+            q = start(sink, ckpt, fetcher, name)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
+        def sinks(sink):
+            return {sub: Counter(
+                tuple(str(v) for k, v in sorted(r.asDict().items())
+                      if k != "_batch")
+                for r in spark.read.parquet(str(sink / sub)).collect())
+                for sub in ("books", "trades", "gaps")}
+
+        drain(tmp_path / "clean_sink", tmp_path / "clean_ckpt",
+              canned_fetcher, "eo_clean")
+        clean = sinks(tmp_path / "clean_sink")
+        assert sum(clean["trades"].values()) == 4   # 2 live + 2 repaired
+
+        for case in ("fetch_fails", "commit_lost"):
+            sink, ckpt = tmp_path / f"{case}_sink", tmp_path / f"{case}_ckpt"
+            if case == "fetch_fails":
+                q = start(sink, ckpt, failing_once_fetcher, "eo_fail")
+                try:
+                    with pytest.raises(Exception):
+                        q.processAllAvailable()
+                finally:
+                    q.stop()
+                assert marker.exists(), case
+            else:
+                drain(sink, ckpt, canned_fetcher, "eo_first")
+                commits = ckpt / "commits"
+                last = max(int(p.name) for p in commits.iterdir()
+                           if p.name.isdigit())
+                (commits / str(last)).unlink()
+                # its checksum too, or the re-commit's rename is refused
+                (commits / f".{last}.crc").unlink(missing_ok=True)
+            drain(sink, ckpt, canned_fetcher, f"eo_{case}")
+            assert sinks(sink) == clean, case
+            trades = spark.read.parquet(str(sink / "trades"))
+            assert trades.select("trade_id").distinct().count() == 4, case
+            assert not [p for p in Path(sink).rglob("*")
+                        if p.name == "_staging"], case
 
 
 class TestTwsBookKernel:

@@ -221,7 +221,8 @@ def test_gap_burst_bounds_in_batch_repair(spark, tmp_path, caplog, n_gaps,
     rows = [{"out_type": "gap", "product_id": "ETH-USD", "server_ts": ts,
              "gap_first_id": i * 10, "gap_last_id": i * 10 + width - 1}
             for i in range(n_gaps)]
-    batch = spark.createDataFrame(rows, OUTPUT_SCHEMA)
+    # one partition: where the kernel's hash partitioning puts one product
+    batch = spark.createDataFrame(rows, OUTPUT_SCHEMA).repartition(1)
 
     def recovered_fetcher(product_id: str, after_id: int) -> list[dict]:
         # exchange back up: pages of trades strictly below the cursor
