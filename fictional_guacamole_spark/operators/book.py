@@ -26,9 +26,12 @@ bug), re-expressed for Spark:
   partitioning, checkpointing, and recovery, so the kernel scales by
   adding executors (state for distinct products never co-resides).
 
-Emitted rows are a tagged union (book | trade | gap) so one stateful pass
-produces the book stream, the trade stream, and the gap side-output the
-backfill operator (T6, streaming/backfill.py) consumes.
+Emitted rows are a tagged union (book | trade | gap | stale) so one
+stateful pass produces the book stream, the trade stream, the gap
+side-output the backfill operator (T6, streaming/backfill.py) consumes,
+and the stale-book alarms. ``OUTPUT_COLUMNS`` declares each type's columns
+once; the renderers here and the sinks in streaming/pipeline.py derive
+from it.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 BOOK_DEPTH = 15  # top levels per side, matching the reference's fixed depth
                  # (/root/reference/real_guac.py:73-74)
@@ -222,8 +226,10 @@ STATE_SCHEMA = T.StructType([
 STALE_STATE_SCHEMA = T.StructType(
     STATE_SCHEMA.fields + [T.StructField("last_ms", T.LongType())])
 
-# Tagged-union output: one stateful pass emits book rows, trade rows, and
-# gap records (the backfill work list).
+# Tagged-union output: one stateful pass emits book rows, trade rows, gap
+# records (the backfill work list) and stale-book alarms. OUTPUT_SCHEMA
+# types every column; OUTPUT_COLUMNS says which columns each out_type
+# fills, in the order its sink files store them.
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("out_type", T.StringType()),   # book | trade | gap | stale
     T.StructField("product_id", T.StringType()),
@@ -240,6 +246,14 @@ OUTPUT_SCHEMA = T.StructType([
     T.StructField("gap_first_id", T.LongType()),
     T.StructField("gap_last_id", T.LongType()),
 ])
+
+OUTPUT_COLUMNS = {
+    "book": ("product_id", "server_ts", "bids", "asks"),
+    "trade": ("product_id", "server_ts", "exchange_ts", "sequence",
+              "trade_id", "price", "volume", "side", "backfilled"),
+    "gap": ("product_id", "server_ts", "gap_first_id", "gap_last_id"),
+    "stale": ("product_id", "server_ts"),
+}
 
 
 def _aslist(v: Any) -> list:
@@ -313,48 +327,39 @@ def _book_row(frame: dict[str, Any], top: tuple[list[str], list[str]]) -> dict[s
 class BatchOut(NamedTuple):
     """Per-type output streams of one kernel batch. The tagged union is
     SPLIT at emission: each stream keeps its own emission order, and each
-    renders to a pandas frame whose absent union fields are constant-None
-    filler columns — no per-row dict, no 14×N cell extraction. The verdict
-    profile showed that assembly (not the kernel math) dominated the
-    throughput query once the heap select went C-level."""
+    row is a tuple in its type's ``OUTPUT_COLUMNS`` order (a trade carries
+    ``backfilled=False``) — no per-row dict, no 14×N cell extraction. The
+    verdict profile showed that assembly (not the kernel math) dominated
+    the throughput query once the heap select went C-level."""
 
-    books: list[tuple]   # (product_id, server_ts, bids, asks)
-    trades: list[tuple]  # (product_id, server_ts, trade_id, sequence,
-                         #  price, volume, side, exchange_ts)
-    gaps: list[tuple]    # (product_id, server_ts, gap_first_id, gap_last_id)
-
-
-_OUT_COLS = [f.name for f in OUTPUT_SCHEMA.fields]
+    books: list[tuple]   # OUTPUT_COLUMNS["book"]
+    trades: list[tuple]  # OUTPUT_COLUMNS["trade"]
+    gaps: list[tuple]    # OUTPUT_COLUMNS["gap"]
 
 
-def _type_pdf(out_type: str, filled: dict[str, list]) -> pd.DataFrame:
-    """One per-type frame in OUTPUT_SCHEMA shape: filled columns from the
-    tuple stream, everything else a constant-None column (Spark's Arrow
-    converter accepts None — never NaN — in array/bool columns)."""
-    n = len(filled["product_id"])
-    data = {c: filled.get(c) if c in filled else [None] * n
-            for c in _OUT_COLS}
-    data["out_type"] = [out_type] * n
-    return pd.DataFrame(data, columns=_OUT_COLS, dtype=object)
+_OUT_NAMES = OUTPUT_SCHEMA.fieldNames()
 
 
-def _out_to_pdfs(out: BatchOut) -> Iterator[pd.DataFrame]:
-    """Render the per-type streams to (up to) three OUTPUT_SCHEMA frames."""
-    if out.books:
-        pid, ts, bids, asks = (list(c) for c in zip(*out.books))
-        yield _type_pdf("book", {"product_id": pid, "server_ts": ts,
-                                 "bids": bids, "asks": asks})
-    if out.trades:
-        pid, ts, tid, seq, price, vol, side, xts = (
-            list(c) for c in zip(*out.trades))
-        yield _type_pdf("trade", {
-            "product_id": pid, "server_ts": ts, "trade_id": tid,
-            "sequence": seq, "price": price, "volume": vol, "side": side,
-            "exchange_ts": xts, "backfilled": [False] * len(pid)})
-    if out.gaps:
-        pid, ts, first, last = (list(c) for c in zip(*out.gaps))
-        yield _type_pdf("gap", {"product_id": pid, "server_ts": ts,
-                                "gap_first_id": first, "gap_last_id": last})
+def _fill(out_type: str, cols: dict[str, list]) -> dict[str, list]:
+    """One type's columns widened to every OUTPUT_SCHEMA column: the
+    out_type tag, then None in the columns the type does not fill (Spark's
+    Arrow converter accepts None — never NaN — in array/bool columns)."""
+    n = len(cols["product_id"])
+    filler = [None] * n
+    return {c: [out_type] * n if c == "out_type" else cols.get(c, filler)
+            for c in _OUT_NAMES}
+
+
+def _streams(out: BatchOut) -> Iterator[dict[str, list]]:
+    """Each non-empty stream of ``out`` as OUTPUT_SCHEMA columns."""
+    for out_type, rows in zip(("book", "trade", "gap"), out):
+        if rows:
+            yield _fill(out_type, dict(zip(OUTPUT_COLUMNS[out_type],
+                                           map(list, zip(*rows)))))
+
+
+def _pdf(cols: dict[str, list]) -> pd.DataFrame:
+    return pd.DataFrame(cols, columns=_OUT_NAMES, dtype=object)
 
 
 def _process_sorted(book: OrderBook, mt: list, col,
@@ -402,8 +407,8 @@ def _process_sorted(book: OrderBook, mt: list, col,
                 gap = book.observe_trade(tid)
                 if gap is not None:
                     add_gap((pids[i], tss[i], gap[0], gap[1]))
-            add_trade((pids[i], tss[i], tid, _asint(seqs[i]),
-                       prices[i], vols[i], sides[i], xtss[i]))
+            add_trade((pids[i], tss[i], xtss[i], _asint(seqs[i]), tid,
+                       prices[i], vols[i], sides[i], False))
         elif t == "snapshot":
             book.install_snapshot(_aslist(snap_bids[i]),
                                   _aslist(snap_asks[i]))
@@ -467,11 +472,11 @@ def make_book_kernel(stale_after_s: int | None = None):
         if state.hasTimedOut:
             *book_state, anchor = state.get
             state.update((*book_state, None))
-            yield _type_pdf("stale", {
+            yield _pdf(_fill("stale", {
                 "product_id": [key[0]],
                 "server_ts": [pd.Timestamp(anchor + stale_after_ms,
                                            unit="ms")],
-            })
+            }))
             return
         saved = state.get if state.exists else None
         book = OrderBook.from_state(*saved[:4]) if saved else OrderBook()
@@ -498,58 +503,12 @@ def make_book_kernel(stale_after_s: int | None = None):
         # up to three per-type frames — Spark concatenates output frames,
         # so splitting the union costs nothing downstream and skips the
         # mostly-null wide assembly entirely
-        yield from _out_to_pdfs(out)
+        yield from map(_pdf, _streams(out))
 
     return book_kernel
 
 
-# Arrow types of the non-timestamp OUTPUT_SCHEMA columns; the two timestamp
-# columns take their type from the INPUT batch's server_ts field so the
-# session-timezone annotation always matches what the JVM sent.
-_PA_TYPES = {
-    "out_type": "string", "product_id": "string",
-    "bids": "list<string>", "asks": "list<string>",
-    "trade_id": "int64", "sequence": "int64",
-    "price": "string", "volume": "string", "side": "string",
-    "backfilled": "bool", "gap_first_id": "int64", "gap_last_id": "int64",
-}
-
-
-def _pa_out_schema(ts_type):
-    lookup = {"string": pa.string(), "list<string>": pa.list_(pa.string()),
-              "int64": pa.int64(), "bool": pa.bool_()}
-    return pa.schema([(c, lookup[_PA_TYPES[c]] if c in _PA_TYPES else ts_type)
-                      for c in _OUT_COLS])
-
-
-def _out_to_tables(out: BatchOut, schema) -> Iterator:
-    """Render the per-type streams straight to (up to) three pyarrow
-    Tables in OUTPUT_SCHEMA shape — the batch-path twin of
-    :func:`_out_to_pdfs`, skipping the object-dtype pandas frame and its
-    per-cell Arrow re-conversion entirely (guide §4.2)."""
-
-    def table(out_type: str, filled: dict) -> pa.Table:
-        n = len(filled["product_id"])
-        filled["out_type"] = [out_type] * n
-        return pa.Table.from_arrays(
-            [pa.array(filled.get(c, [None] * n), type=schema.field(c).type)
-             for c in _OUT_COLS], schema=schema)
-
-    if out.books:
-        pid, ts, bids, asks = (list(c) for c in zip(*out.books))
-        yield table("book", {"product_id": pid, "server_ts": ts,
-                             "bids": bids, "asks": asks})
-    if out.trades:
-        pid, ts, tid, seq, price, vol, side, xts = (
-            list(c) for c in zip(*out.trades))
-        yield table("trade", {
-            "product_id": pid, "server_ts": ts, "trade_id": tid,
-            "sequence": seq, "price": price, "volume": vol, "side": side,
-            "exchange_ts": xts, "backfilled": [False] * len(pid)})
-    if out.gaps:
-        pid, ts, first, last = (list(c) for c in zip(*out.gaps))
-        yield table("gap", {"product_id": pid, "server_ts": ts,
-                            "gap_first_id": first, "gap_last_id": last})
+_ARROW_OUTPUT_SCHEMA = to_arrow_schema(OUTPUT_SCHEMA)
 
 
 def book_kernel_batch_arrow(key: tuple, tbl: pa.Table) -> pa.Table:
@@ -559,11 +518,17 @@ def book_kernel_batch_arrow(key: tuple, tbl: pa.Table) -> pa.Table:
     sides of the boundary. Measured at sf0.1 the pandas object-frame
     conversion was the dominant term of the batch replay (identity-kernel
     probe: ~1.1 s of a 2.3 s row); this path removes it for every batch
-    replay consumer. (Both parameters carry
-    type hints — PySpark's ``infer_group_arrow_eval_type_from_func``
-    raises on partially-annotated functions.)"""
-    schema = _pa_out_schema(tbl.schema.field("server_ts").type)
-    parts = list(_out_to_tables(process_table(OrderBook(), tbl), schema))
+    replay consumer. Each per-type stream becomes one Table in the Arrow
+    form of OUTPUT_SCHEMA, except that both timestamp columns take the
+    INPUT batch's server_ts type, so the session-timezone annotation
+    matches what the JVM sent. (Both parameters carry type hints —
+    PySpark's ``infer_group_arrow_eval_type_from_func`` raises on
+    partially-annotated functions.)"""
+    ts_type = tbl.schema.field("server_ts").type
+    schema = pa.schema([f.with_type(ts_type) if pa.types.is_timestamp(f.type)
+                        else f for f in _ARROW_OUTPUT_SCHEMA])
+    parts = [pa.Table.from_pydict(cols, schema=schema)
+             for cols in _streams(process_table(OrderBook(), tbl))]
     if not parts:
         return schema.empty_table()
     if len(parts) == 1:
@@ -579,7 +544,9 @@ def apply_book_kernel(frames_df, stale_after_s: int | None = None):
     event-time timeout (see make_book_kernel). Batch (full-replay
     analytics / golden tests): the same pure kernel via stateless
     ``applyInArrow`` — a batch holds the whole history, so state starts
-    empty per product, and no alarm can be armed.
+    empty per product, and no alarm can be armed. Both legs emit
+    OUTPUT_SCHEMA rows: each ``out_type`` fills the columns
+    ``OUTPUT_COLUMNS`` names for it and leaves the rest null.
 
     Two alternative batch shapes were MEASURED and rejected in round 6
     (sf0.1 bench, best-of-3, vs 2.56 s for this path): (a) mapInPandas

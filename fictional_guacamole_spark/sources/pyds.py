@@ -53,13 +53,13 @@ def _register_by_value(spark: SparkSession, cls) -> None:
     pickle dies with ModuleNotFoundError whenever the driver's cwd isn't
     the repo (exactly how the round driver runs us; caught by the
     bare-session /verify recipe). cloudpickle's documented fix:
-    register this module for by-value pickling so the class definitions
-    travel inside the pickle itself."""
+    register the class's module for by-value pickling so the class
+    definitions travel inside the pickle itself."""
     import sys
 
     from pyspark import cloudpickle
 
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(sys.modules[cls.__module__])
     spark.dataSource.register(cls)
 
 

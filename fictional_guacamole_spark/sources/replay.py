@@ -14,23 +14,32 @@ files through the ordinary file source with an arrival-order ``seq``.
 from __future__ import annotations
 
 import json
+import math
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
+
+from fictional_guacamole_spark.sources.pyds import _register_by_value
 
 REPLAY_SCHEMA = "seq long, value string"
 
 
-@dataclass
-class _Offset:
-    line: int
-
-    def json(self) -> dict:
-        return {"line": self.line}
+def _scan(fh, line: int, stop: float) -> tuple[list, int]:
+    """Scan ``fh`` from its current position, which is the start of line
+    ``line``, up to line ``stop``: the ``(line, frame)`` rows of the
+    non-blank lines, and the number of the first line not scanned."""
+    rows = []
+    while line < stop:
+        text = fh.readline()
+        if not text:
+            break
+        text = text.strip()
+        if text:
+            rows.append((line, text))
+        line += 1
+    return rows, line
 
 
 class ReplayStreamReader(SimpleDataSourceStreamReader):
@@ -38,45 +47,45 @@ class ReplayStreamReader(SimpleDataSourceStreamReader):
 
     The offset is the absolute line number, so checkpoint recovery re-reads
     from exactly the committed position (at-least-once within a batch,
-    exactly-once end-to-end with an idempotent sink).
+    exactly-once end-to-end with an idempotent sink). The reader keeps the
+    byte position where its last scan ended, so the next ``read`` from
+    there seeks instead of rescanning the file; a fresh reader (a restart)
+    counts lines from the top.
     """
 
     def __init__(self, options: dict) -> None:
         self.path = options["path"]
         self.frames_per_batch = int(options.get("framesPerBatch", "100"))
+        self._end: tuple[int, int] | None = None  # (line, byte position)
 
     def initialOffset(self) -> dict:
         return {"line": 0}
 
+    def _rows(self, start: int, stop: float) -> tuple[list, int]:
+        """``_scan`` of lines ``[start, stop)``, seeking to where the last
+        scan ended when it ended at ``start``."""
+        with open(self.path, encoding="utf-8") as fh:
+            if self._end is not None and self._end[0] == start:
+                fh.seek(self._end[1])
+            else:
+                for _ in range(start):
+                    if not fh.readline():
+                        break
+            rows, end = _scan(fh, start, stop)
+            self._end = (end, fh.tell())
+        return rows, end
+
     def read(self, start: dict) -> tuple:
-        start_line = start["line"]
-        rows = []
         # The end offset advances by lines SCANNED, not rows emitted: a
         # blank line inside the window would otherwise be re-scanned (its
         # followers re-emitted = duplicate seq values), and a window of all
         # blanks would leave the offset pinned forever.
-        last_scanned = start_line - 1
-        with open(self.path, encoding="utf-8") as fh:
-            for i, line in enumerate(fh):
-                if i < start_line:
-                    continue
-                if i >= start_line + self.frames_per_batch:
-                    break
-                last_scanned = i
-                line = line.strip()
-                if line:
-                    rows.append((i, line))
-        return iter(rows), {"line": last_scanned + 1}
+        rows, end = self._rows(start["line"],
+                               start["line"] + self.frames_per_batch)
+        return iter(rows), {"line": end}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> iter:
-        rows = []
-        with open(self.path, encoding="utf-8") as fh:
-            for i, line in enumerate(fh):
-                if start["line"] <= i < end["line"]:
-                    line = line.strip()
-                    if line:
-                        rows.append((i, line))
-        return iter(rows)
+        return iter(self._rows(start["line"], end["line"])[0])
 
 
 class ReplayDataSource(DataSource):
@@ -94,15 +103,7 @@ class ReplayDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    # by-VALUE registration: the streaming source runner is a driver-side
-    # python process without the addPyFile zip — a by-reference pickle
-    # dies outside the repo cwd (see sources/pyds.py::_register_by_value)
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-    spark.dataSource.register(ReplayDataSource)
+    _register_by_value(spark, ReplayDataSource)
 
 
 def read_frames_stream(spark: SparkSession, path: str,
@@ -118,13 +119,9 @@ def read_frames_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch load of a capture file with arrival-order seq (single capture
     file = single connection's ordered frames; the per-file readers keep
     line order, and seq makes the order explicit for the kernel)."""
-    lines = []
     with open(path, encoding="utf-8") as fh:
-        for i, line in enumerate(fh):
-            line = line.strip()
-            if line:
-                lines.append((i, line))
-    return spark.createDataFrame(lines, REPLAY_SCHEMA)
+        rows, _ = _scan(fh, 0, math.inf)
+    return spark.createDataFrame(rows, REPLAY_SCHEMA)
 
 
 def write_capture(path: str, frames: list[dict | str]) -> str:

@@ -32,6 +32,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
+from fictional_guacamole_spark.sources.pyds import _register_by_value
+
 WS_SCHEMA = "seq long, value string"
 
 SUBSCRIBE_BUILDERS = {
@@ -130,12 +132,4 @@ class WebsocketDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    # by-VALUE registration: the streaming source runner is a driver-side
-    # python process without the addPyFile zip — a by-reference pickle
-    # dies outside the repo cwd (see sources/pyds.py::_register_by_value)
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-    spark.dataSource.register(WebsocketDataSource)
+    _register_by_value(spark, WebsocketDataSource)

@@ -29,31 +29,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fictional_guacamole_spark.operators.book import (
-    BOOK_DEPTH, apply_book_kernel)
+    BOOK_DEPTH, OUTPUT_COLUMNS, OUTPUT_SCHEMA, apply_book_kernel)
 from fictional_guacamole_spark.streaming.backfill import Fetcher, backfill_gaps
-
-BOOK_COLS = ["product_id", "server_ts", "bids", "asks"]
-TRADE_COLS = ["product_id", "server_ts", "exchange_ts", "sequence",
-              "trade_id", "price", "volume", "side", "backfilled"]
-GAP_COLS = ["product_id", "server_ts", "gap_first_id", "gap_last_id"]
-STALE_COLS = ["product_id", "server_ts"]
 
 # out_type → (sink directory, columns in its files); product_id is the
 # partition column, so it lives in the path only
-SINKS = {out_type: (sub, [c for c in cols if c != "product_id"])
-         for out_type, sub, cols in [("book", "books", BOOK_COLS),
-                                     ("trade", "trades", TRADE_COLS),
-                                     ("gap", "gaps", GAP_COLS),
-                                     ("stale", "stale", STALE_COLS)]}
+SINKS = {out_type: (sub, [c for c in OUTPUT_COLUMNS[out_type]
+                          if c != "product_id"])
+         for out_type, sub in [("book", "books"), ("trade", "trades"),
+                               ("gap", "gaps"), ("stale", "stale")]}
 
 logger = logging.getLogger("fictional_guacamole_spark.pipeline")
 
 
 def demux_outputs(out: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Split the kernel's tagged union into (books, trades, gaps)."""
-    books = out.filter(F.col("out_type") == "book").select(*BOOK_COLS)
-    trades = out.filter(F.col("out_type") == "trade").select(*TRADE_COLS)
-    gaps = out.filter(F.col("out_type") == "gap").select(*GAP_COLS)
+    books, trades, gaps = (
+        out.filter(F.col("out_type") == out_type)
+        .select(*OUTPUT_COLUMNS[out_type])
+        for out_type in ("book", "trade", "gap"))
     return books, trades, gaps
 
 
@@ -72,8 +66,9 @@ _ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
 
 
 def _partition_dir(product: str | None) -> str:
-    """``product_id=<p>``, named as Spark's partitioned writer names it."""
-    if product is None:
+    """``product_id=<p>``, named as Spark's partitioned writer names it:
+    null and the empty string both go to the default partition."""
+    if not product:
         return "product_id=__HIVE_DEFAULT_PARTITION__"
     return "product_id=" + "".join(
         f"%{ord(c):02X}" if c in _ESCAPED else c for c in product)
@@ -115,14 +110,14 @@ def _stage_task(stage: str, fetcher: Fetcher | None, max_ranges: int):
                 continue
             sub, cols = SINKS[out_type]
             rows = tbl.filter(pc.equal(tbl["out_type"], out_type))
-            pid = rows["product_id"]
+            # null and "" share one partition directory, so one file
+            pid = pc.fill_null(rows["product_id"], "")
             for product in pc.unique(pid).to_pylist():
-                mask = (pc.is_null(pid) if product is None
-                        else pc.equal(pid, product))
                 out_dir = os.path.join(stage, sub, _partition_dir(product))
                 os.makedirs(out_dir, exist_ok=True)
-                pq.write_table(rows.filter(mask).select(cols),
-                               os.path.join(out_dir, part))
+                pq.write_table(
+                    rows.filter(pc.equal(pid, product)).select(cols),
+                    os.path.join(out_dir, part))
         yield pa.RecordBatch.from_pydict(
             {"rows": [tbl.num_rows], "past_cap": [past_cap]})
 
@@ -291,19 +286,14 @@ def export_csv(df: DataFrame, path: str) -> None:
 def create_sink_tables(spark: SparkSession, sink_dir: str) -> None:
     """K3: declare the sink tables in the catalog over the parquet dirs
     (the reference's DDL migration, db_utils.py:34-45, becomes idempotent
-    CREATE TABLE ... USING PARQUET LOCATION)."""
-    specs = {
-        "exchange_books": ("books", "server_ts TIMESTAMP, "
-                                    "bids ARRAY<STRING>, asks ARRAY<STRING>"),
-        "exchange_trades": ("trades", "server_ts TIMESTAMP, "
-                                      "exchange_ts TIMESTAMP, sequence BIGINT, "
-                                      "trade_id BIGINT, price STRING, "
-                                      "volume STRING, side STRING, "
-                                      "backfilled BOOLEAN"),
-        "exchange_gaps": ("gaps", "server_ts TIMESTAMP, "
-                                  "gap_first_id BIGINT, gap_last_id BIGINT"),
-    }
-    for table, (sub, ddl) in specs.items():
+    CREATE TABLE ... USING PARQUET LOCATION). Each table's columns are its
+    sink's, typed as in OUTPUT_SCHEMA."""
+    types = {f.name: f.dataType.simpleString() for f in OUTPUT_SCHEMA.fields}
+    for table, out_type in [("exchange_books", "book"),
+                            ("exchange_trades", "trade"),
+                            ("exchange_gaps", "gap")]:
+        sub, cols = SINKS[out_type]
+        ddl = ", ".join(f"{c} {types[c]}" for c in cols)
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         spark.sql(
             f"CREATE TABLE {table} ({ddl}, _batch BIGINT, product_id STRING) "

@@ -361,8 +361,8 @@ def test_process_batch_equals_process_frames(deltas, trade_ids):
         (r["product_id"], r["server_ts"], r["bids"], r["asks"])
         for r in ref if r["out_type"] == "book"]
     assert fast.trades == [
-        (r["product_id"], r["server_ts"], r["trade_id"], r["sequence"],
-         r["price"], r["volume"], r["side"], r["exchange_ts"])
+        (r["product_id"], r["server_ts"], r["exchange_ts"], r["sequence"],
+         r["trade_id"], r["price"], r["volume"], r["side"], r["backfilled"])
         for r in ref if r["out_type"] == "trade"]
     assert fast.gaps == [
         (r["product_id"], r["server_ts"], r["gap_first_id"], r["gap_last_id"])

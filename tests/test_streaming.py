@@ -369,6 +369,131 @@ class TestStreamingEndToEnd:
             assert not [p for p in Path(sink).rglob("*")
                         if p.name == "_staging"], case
 
+    def test_empty_product_id_keeps_sinks_readable(self, spark, tmp_path):
+        """A frame whose product_id is "" lands in the partition Spark's
+        own writer gives it (``__HIVE_DEFAULT_PARTITION__``), so the sink
+        still reads back with every row."""
+        cap = write_capture(str(tmp_path / "empty_pid.jsonl"), [
+            {"type": "match", "product_id": "", "trade_id": 1,
+             "sequence": 1, "price": "1.0", "size": "0.5", "side": "buy",
+             "time": "2024-01-05T10:00:00.000001Z"},
+            {"type": "match", "product_id": "ETH-USD", "trade_id": 7,
+             "sequence": 2, "price": "2.0", "size": "0.5", "side": "sell",
+             "time": "2024-01-05T10:00:01.000001Z"},
+        ])
+        frames = ensure_frame_schema(
+            parse_gdax_frames(read_frames_stream(spark, cap)))
+        sink = str(tmp_path / "sink")
+        q = run_pipeline(frames, sink, str(tmp_path / "ckpt"),
+                         query_name="empty_pid")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        trades = spark.read.parquet(f"{sink}/trades").collect()
+        assert sorted((r["product_id"] or "", r["trade_id"])
+                      for r in trades) == [("", 1), ("ETH-USD", 7)]
+
+    def test_sink_files_follow_the_one_declaration(self, spark, tmp_path):
+        """OUTPUT_SCHEMA is out_type plus the union of OUTPUT_COLUMNS, and
+        every parquet file of every sink holds exactly its type's columns
+        but product_id, in OUTPUT_COLUMNS order, with OUTPUT_SCHEMA's
+        types (timestamps as UTC instants)."""
+        from pathlib import Path
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from fictional_guacamole_spark.operators.book import (
+            OUTPUT_COLUMNS, OUTPUT_SCHEMA)
+
+        names = OUTPUT_SCHEMA.fieldNames()
+        assert names[0] == "out_type"
+        assert sorted(names[1:]) == sorted(
+            {c for cols in OUTPUT_COLUMNS.values() for c in cols})
+        assert len(names) == len(set(names))
+
+        def frame(msg_type, pid, ts, **kw):
+            f = {"type": msg_type, "product_id": pid,
+                 "time": f"2024-01-05T{ts}.000000Z", **kw}
+            if msg_type == "snapshot":
+                f.update(bids=[["100", "1"]], asks=[["101", "1"]])
+            elif msg_type == "l2update":
+                f["changes"] = [["buy", "100", "2"]]
+            return f
+
+        cap = write_capture(str(tmp_path / "all_sinks.jsonl"), [
+            frame("snapshot", "A", "10:00:00"),
+            frame("match", "A", "10:00:01", trade_id=100, sequence=1,
+                  price="100.5", size="0.25", side="buy"),
+            # gap: 101..102 missing, repaired by the fetcher
+            frame("match", "A", "10:00:02", trade_id=103, sequence=2,
+                  price="100.6", size="0.5", side="sell"),
+            frame("snapshot", "B", "10:01:00"),
+            frame("l2update", "B", "10:02:00"),
+        ])
+        frames = ensure_frame_schema(parse_gdax_frames(
+            read_frames_stream(spark, cap, frames_per_batch=2)))
+        sink = tmp_path / "sink"
+        q = run_pipeline(frames, str(sink), str(tmp_path / "ckpt"),
+                         fetcher=canned_fetcher, query_name="one_decl",
+                         dedupe_horizon="0 seconds", stale_after_s=10)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        arrow = to_arrow_schema(OUTPUT_SCHEMA)
+        for out_type, sub in [("book", "books"), ("trade", "trades"),
+                              ("gap", "gaps"), ("stale", "stale")]:
+            cols = [c for c in OUTPUT_COLUMNS[out_type] if c != "product_id"]
+            files = sorted(Path(sink, sub).rglob("*.parquet"))
+            assert files, sub
+            for path in files:
+                schema = pq.read_schema(path)
+                assert schema.names == cols, path
+                for c in cols:
+                    want = arrow.field(c).type
+                    if pa.types.is_timestamp(want):
+                        want = pa.timestamp("us", "UTC")
+                    assert schema.field(c).type == want, (path, c)
+
+
+class TestReplaySource:
+    def test_reads_resume_where_the_last_read_ended(self, tmp_path):
+        """Consecutive ``read`` windows, blank lines and an all-blank
+        window included, equal one ``readBetweenOffsets`` over the whole
+        range; a fresh reader (a restart) reading from a mid offset
+        returns the same window as the running one."""
+        from fictional_guacamole_spark.sources.replay import (
+            ReplayStreamReader)
+
+        lines = ["f0", "", "f2", "", "  ", "", "f6", "f7", "", "f9"]
+        cap = str(tmp_path / "blanks.jsonl")
+        with open(cap, "w", encoding="utf-8") as fh:
+            fh.write("\n".join(lines) + "\n")
+        opts = {"path": cap, "framesPerBatch": "3"}
+
+        reader = ReplayStreamReader(opts)
+        offset, windows = reader.initialOffset(), []
+        while True:
+            rows, end = reader.read(offset)
+            if end == offset:
+                assert list(rows) == []
+                break
+            windows.append((offset, list(rows), end))
+            offset = end
+        assert [w[1] for w in windows] == [
+            [(0, "f0"), (2, "f2")], [], [(6, "f6"), (7, "f7")], [(9, "f9")]]
+        assert offset == {"line": len(lines)}
+        assert ([r for w in windows for r in w[1]]
+                == list(ReplayStreamReader(opts).readBetweenOffsets(
+                    {"line": 0}, offset)))
+        for start, rows, end in windows:
+            fresh_rows, fresh_end = ReplayStreamReader(opts).read(start)
+            assert (list(fresh_rows), fresh_end) == (rows, end), start
+
 
 class TestTwsBookKernel:
     """The stale-book alarm on the book kernel's event-time timeout
@@ -441,7 +566,9 @@ class TestTwsBookKernel:
           watermark → no alarm;
         - behind_watermark: C's first frame lands more than T behind the
           watermark; its alarm still fires (at 09:01), it does not
-          kill the query;
+          kill the query. C's frame is batch 2, whose watermark (10:00)
+          stays until batch 4 (12:00), so C alarms in batch 4, on the
+          next watermark advance, not in its frame's trigger;
         - once_per_episode: A alarms once while idle, is re-armed by its
           next frame, and alarms once more — never again per trigger;
         - at_deadline: the final watermark EQUALS A's last frame + T, so
@@ -474,7 +601,8 @@ class TestTwsBookKernel:
                 frames_per_batch=1, stale_after_s=60,
                 dedupe_horizon="2 hours",
                 stale=[("A", "2024-01-05 10:01:00"),
-                       ("C", "2024-01-05 09:01:00")], books=None),
+                       ("C", "2024-01-05 09:01:00")], books=None,
+                stale_batches=[("A", 4), ("C", 4)]),
             "once_per_episode": dict(
                 frames=[frame("snapshot", "A", "10:00:00"),
                         frame("snapshot", "B", "10:00:00"),
@@ -512,6 +640,9 @@ class TestTwsBookKernel:
             stale = spark.read.parquet(f"{sink}/stale").collect()
             assert sorted((r["product_id"], str(r["server_ts"]))
                           for r in stale) == case["stale"], name
+            if "stale_batches" in case:
+                assert sorted((r["product_id"], r["_batch"])
+                              for r in stale) == case["stale_batches"], name
             if case["books"] is not None:
                 # the alarm never perturbs the judged sinks
                 assert (spark.read.parquet(f"{sink}/books").count()
