@@ -369,6 +369,88 @@ class TestStreamingEndToEnd:
             assert not [p for p in Path(sink).rglob("*")
                         if p.name == "_staging"], case
 
+    def test_state_commits_write_changelogs(self, spark, gdax_capture,
+                                            tmp_path):
+        """Each state commit of a two-batch replay writes that version's
+        changelog under the checkpoint's state/ directory."""
+        import re
+        from pathlib import Path
+
+        frames = ensure_frame_schema(
+            parse_gdax_frames(read_frames_stream(spark, gdax_capture,
+                                                 frames_per_batch=4)))
+        ckpt = tmp_path / "ckpt"
+        q = run_pipeline(frames, str(tmp_path / "sink"), str(ckpt),
+                         fetcher=canned_fetcher, query_name="changelog")
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        versions = {int(m.group(1)) for p in Path(ckpt, "state").rglob("*")
+                    if (m := re.fullmatch(r"(\d+)(?:_[^.]*)?\.changelog",
+                                          p.name))}
+        assert {1, 2} <= versions, sorted(versions)
+
+    def test_snapshot_checkpoint_resumes_under_changelogs(self, spark,
+                                                          tmp_path):
+        """A query started with snapshot-only state commits and the
+        FileContext checkpoint manager resumes on the same checkpoint
+        under the session's confs; its sinks equal a clean run's, the gap
+        and the book delete read from state written before the switch."""
+        from collections import Counter
+
+        frames = [GDAX_FRAMES[0], GDAX_FRAMES[4], GDAX_FRAMES[1],
+                  GDAX_FRAMES[2], GDAX_FRAMES[5], GDAX_FRAMES[3]]
+        cap = str(tmp_path / "capture.jsonl")
+
+        def drain(sink, ckpt, name):
+            stream = ensure_frame_schema(parse_gdax_frames(
+                read_frames_stream(spark, cap, frames_per_batch=2)))
+            q = run_pipeline(stream, str(sink), str(ckpt),
+                             fetcher=canned_fetcher, query_name=name,
+                             dedupe_horizon="10 minutes")
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+
+        def sinks(sink):
+            return {sub: Counter(
+                tuple(str(v) for k, v in sorted(r.asDict().items())
+                      if k != "_batch")
+                for r in spark.read.parquet(str(sink / sub)).collect())
+                for sub in ("books", "trades", "gaps")}
+
+        write_capture(cap, frames)
+        drain(tmp_path / "clean_sink", tmp_path / "clean_ckpt", "upg_clean")
+        clean = sinks(tmp_path / "clean_sink")
+        assert sum(clean["gaps"].values()) == 1
+
+        old_confs = {
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled": "false",
+            "spark.sql.streaming.checkpointFileManagerClass":
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileContextBasedCheckpointFileManager",
+        }
+        sink, ckpt = tmp_path / "sink", tmp_path / "ckpt"
+        write_capture(cap, frames[:4])
+        saved = {k: spark.conf.get(k, None) for k in old_confs}
+        try:
+            for k, v in old_confs.items():
+                spark.conf.set(k, v)
+            drain(sink, ckpt, "upg_old")
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert not list(ckpt.joinpath("state").rglob("*.changelog"))
+        write_capture(cap, frames)
+        drain(sink, ckpt, "upg_new")
+        assert sinks(sink) == clean
+
     def test_empty_product_id_keeps_sinks_readable(self, spark, tmp_path):
         """A frame whose product_id is "" lands in the partition Spark's
         own writer gives it (``__HIVE_DEFAULT_PARTITION__``), so the sink
